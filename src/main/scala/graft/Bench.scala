@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -135,15 +134,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     // SPARK_GRAFT_ONLY=q10_...,q20_... restricts the run (profiling aid);
     // SPARK_GRAFT_REPS=N times each query N times and reports the MINIMUM
     // (the least-interference estimate — local[32] numbers carry ±0.5 s of

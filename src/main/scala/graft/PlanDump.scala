@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -29,15 +28,7 @@ object PlanDump {
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
     val only = args.drop(3).toSet
     var failed = 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }

@@ -22,8 +22,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (guide §3.3 "materialising an intermediate result truncates the
   * plan"; §5 localCheckpoint).
   *
-  * Mechanics shared with Dedup's ccMemo (the original instance of this
-  * pattern): single-flight per key — the miss path runs multi-second
+  * The q69/q77 connected-component labels (Dedup.nearDupClusters) are
+  * memoized here too, under family "cc".
+  *
+  * Mechanics: single-flight per key — the miss path runs multi-second
   * Spark jobs, so concurrent callers for one key must not each compute,
   * while different keys must not serialize behind a global lock — and a
   * cheap head(1) liveness probe on every hit, because localCheckpoint

@@ -4,21 +4,26 @@ package graft
   * directory per (namespace, corpus), and a single-flight write-once memo.
   * This is the q105 staging discipline (one eager materialization serves
   * every subsequent plan construction; two threads never interleave
-  * overwrite-and-read on one dir) factored out so the dedup shingle stage
-  * (Dedup.minhashLshStaged) and the ANN index stages (Similarity
-  * q150/q151) share one implementation.
+  * overwrite-and-read on one dir), and the ONE implementation of it: the
+  * dedup shingle stage (Dedup.minhashLshStaged), the ANN and lexical
+  * index stages (Similarity q150/q151, TextAnalysis q168/q169), the
+  * rollup, compaction and schema-evolution stages (q155/q158/q166), the
+  * ORC, JSONL, XML, partitioned and bucketed source stages
+  * (q121/q117/q138/q130/q132), the brc sink stage and every streaming
+  * stage, q142's state checkpoint included.
   *
   * Durability: by default the root is a temp dir deleted on JVM exit
   * (tests, one-shot jobs). Setting `-Dgraft.stage.dir=<path>` points the
   * root at real storage and the stages become DURABLE: every completed
   * [[once]] drops a `<key>.staged` marker next to the stage, and a fresh
   * JVM seeing the marker serves the existing files instead of rebuilding —
-  * the "materialized once" contract survives restarts. [[forget]] removes
-  * the marker with the memo, so corpus-rewrite invalidation works the
-  * same in both modes. (Markers are written in both modes; under the temp
-  * root they die with the JVM, so they add nothing — and cost nothing.)
-  * Single-flight is per-JVM; concurrent DRIVERS racing one durable stage
-  * need external coordination, as with any shared output path.
+  * the "materialized once" contract survives restarts. [[forget]] and
+  * [[forgetCorpus]] remove the markers with the memo, so corpus-rewrite
+  * invalidation works the same in both modes. (Markers are written in
+  * both modes; under the temp root they die with the JVM, so they add
+  * nothing — and cost nothing.) Single-flight is per-JVM; concurrent
+  * DRIVERS racing one durable stage need external coordination, as with
+  * any shared output path.
   */
 object Staging {
 
@@ -59,12 +64,14 @@ object Staging {
     * CANONICAL absolute corpus path, so distinct corpora can never share
     * a stage (a lossy character substitution would map '/a/b' and '/a_b'
     * to one key). */
-  def dirFor(ns: String, d: String): String = {
+  def dirFor(ns: String, d: String): String =
+    root.resolve(s"$ns-${corpusKey(d)}").toString
+
+  private def corpusKey(d: String): String = {
     val canon = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    val key = java.security.MessageDigest.getInstance("MD5")
+    java.security.MessageDigest.getInstance("MD5")
       .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
-    root.resolve(s"$ns-$key").toString
   }
 
   /** Run `write` the first time `key` is staged — in this JVM (memo) or,
@@ -161,6 +168,22 @@ object Staging {
     * the durable marker too, so invalidation survives into the next JVM. */
   def forget(key: String): Unit = {
     written.remove(key); marker(key).delete(); preManifest(key).delete(); ()
+  }
+
+  /** Forget EVERY stage of corpus `d`, whatever its namespace — the
+    * corpus-rewrite hook (Dedup.invalidateClusters routes here). Drops
+    * each key under `<root>/<ns>-<md5(canon d)>` (`<dir>`, `<dir>@step`
+    * and `<dir>/sub@step` alike) with its `.staged` marker and `.pre`
+    * manifest, so a new stage can never be left out of invalidation.
+    * The data stays; the next [[once]] overwrites it. */
+  def forgetCorpus(d: String): Unit = {
+    val tag = "-" + corpusKey(d)
+    written.keys.filter(_.contains(tag)).foreach(written.remove)
+    Option(root.toFile.listFiles).toSeq.flatten
+      .filter(_.getName.contains(tag))
+      .flatMap(f => listFilesUnder(Seq(f.getPath)))
+      .filter(f => f.getName.endsWith(".staged") || f.getName.endsWith(".pre"))
+      .foreach(_.delete())
   }
 
   /** Spec probe: the file list [[onceAppend]] would snapshot for `dirs`. */

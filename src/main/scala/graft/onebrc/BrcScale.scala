@@ -1,6 +1,5 @@
 package graft.onebrc
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Standalone throughput benchmark at the reference's own scale
@@ -18,14 +17,7 @@ object BrcScale {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 100000000L
     val dir = if (args.length > 1) args(1) else "/tmp/brc_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
@@ -36,7 +28,8 @@ object BrcScale {
     val skipGen = args.contains("--skip-gen")
     if (!skipGen) {
       val gen = OneBrc.generate(spark, rows)
-        .repartition(cpus.toInt * 4) // enough splits for dynamic balance
+        // enough splits for dynamic balance
+        .repartition(graft.GraftSession.cpus * 4)
       val (_, tCsv) = timed {
         gen.write.mode("overwrite").option("sep", ";").option("header", "false")
           .csv(s"$dir/csv")

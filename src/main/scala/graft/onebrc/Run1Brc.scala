@@ -1,6 +1,5 @@
 package graft.onebrc
 
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point mirroring the reference's `main()` surface
   * (rust_1brc/src/main.rs:253-277, rangnargrootkeorkamp.rs:330-353): run
@@ -17,13 +16,7 @@ object Run1Brc {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse(
       sys.error("usage: Run1Brc <measurements-file> [--print] [--fast]"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     // UTF-8 output regardless of the JVM's platform charset — station
     // names are non-ASCII-capable (FIXTURES.md §1)
     val out = new java.io.PrintStream(System.out, true, "UTF-8")

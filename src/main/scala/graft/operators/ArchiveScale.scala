@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Full-scale proof for the archive-ingestion family (q283–q286/q300)
@@ -71,14 +70,8 @@ object ArchiveScale {
     val recsPerFile = pos.drop(1).headOption.map(_.toInt).getOrElse(512)
     val work = pos.drop(2).headOption.getOrElse("/tmp/graft_archive_scale")
     val skipGen = args.contains("--skip-gen")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
     graft.functions.ArchiveFunctions.register(spark)
 
     def timed[T](phase: String)(body: => T): T = {

@@ -486,70 +486,33 @@ object Dedup {
     * join + one partial-agg groupBy). Labels only decrease, so the sum of
     * labels is a strictly-decreasing convergence witness — one cheap
     * scalar action per round, no self-join diffing. */
-  /** The CC labels are memoized per (session, dir): unlike the declarative
-    * shingle/signature frames (shared through the cache manager by plan
-    * identity), the fixpoint loop runs driver-side actions, so each caller
-    * would re-execute it. One computation serves q69 + q77 — the
-    * in-session analog of staging the labels table once per corpus, which
-    * is exactly what a 100 TB pipeline would persist between stages. */
-  private val ccMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def nearDupClusters(s: SparkSession, d: String): DataFrame = {
-    // evict entries pinned to stopped sessions (their blocks are gone
-    // anyway); a long-lived multi-session app never accumulates state
-    ccMemo.keys.filter(_._1.sparkContext.isStopped).foreach(ccMemo.remove)
-    ccLocks.keys.filter(_._1.sparkContext.isStopped).foreach(ccLocks.remove)
-    // liveness probe on a memo hit: the labels frame is backed by
-    // localCheckpoint blocks, which are NOT fault-tolerant — on a cluster
-    // an executor loss takes them with it. The frame is O(near-dup docs)
-    // tiny, so head(1) is a cheap validity check; on failure recompute
-    // instead of serving a permanently broken frame for the session.
-    // single-flight PER KEY: the miss path runs a multi-second
-    // driver-side fixpoint loop, so concurrent callers for the same
-    // (session, dir) must not each compute their own labels frame —
-    // while callers for DIFFERENT corpora must not serialize behind one
-    // global monitor (the lock is held across Spark actions)
-    ccLocks.getOrElseUpdate((s, d), new Object).synchronized {
-      ccMemo.get((s, d))
-        .filter(df => scala.util.Try(df.head(1)).isSuccess)
-        .getOrElse {
-          val fresh = clustersFromPairs(
-            minhashLshFrom(shingles(s, d)).select(col("i"), col("j")))
-          ccMemo((s, d)) = fresh
-          fresh
-        }
+  /** The CC labels are memoized per (session, corpus) through
+    * [[graft.SessionMemo]]: unlike the declarative shingle/signature
+    * frames (shared through the cache manager by plan identity), the
+    * fixpoint loop runs driver-side actions, so each caller would
+    * re-execute it. One computation serves q69 + q77 — the in-session
+    * analog of staging the labels table once per corpus, which is exactly
+    * what a 100 TB pipeline would persist between stages. */
+  def nearDupClusters(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo.once(s, "cc", d) {
+      clustersFromPairs(
+        minhashLshFrom(shingles(s, d)).select(col("i"), col("j")))
     }
-  }
 
-  private val ccLocks =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Object]
-
-  /** Invalidate everything this module has staged for (session, dir) —
-    * required after rewriting the corpus under `d` in-session, and the
-    * release hook a long-lived driver calls when done with a corpus.
-    * Drops the memoized CC labels, UNPERSISTS every frame the library
+  /** Invalidate everything the library has staged or memoized for
+    * corpus `d` — required after rewriting the corpus under `d`
+    * in-session, and the release hook a long-lived driver calls when done
+    * with a corpus. Drops every session-memoized frame of the corpus (CC
+    * labels, trained models), forgets EVERY parquet stage of the corpus
+    * whatever its namespace (see [[graft.Staging.forgetCorpus]]), drops
+    * the streaming schema probe, UNPERSISTS every frame the library
     * registered for the session (see [[graft.CacheRegistry]] — without
     * this the cache accumulates one entry per corpus per query family for
-    * the session's lifetime), forgets the corpus's parquet stage (so q105
-    * re-stages), and refreshes the path-derived cache entries. */
+    * the session's lifetime), and refreshes the path-derived cache
+    * entries. */
   def invalidateClusters(s: SparkSession, d: String): Unit = {
-    ccMemo.remove((s, d))
     graft.SessionMemo.forgetDir(d)
-    graft.Staging.forget(stageDir(d))
-    // library-wide: every per-corpus memo in the session dies with the
-    // corpus, not just this module's — the staged ANN index (q150) would
-    // otherwise serve stale PQ codes against a fresh oracle, and the
-    // streaming schema probe would describe the old physical generation
-    graft.operators.Similarity.forgetAnnStages(d)
-    graft.Staging.forget(graft.Staging.dirFor("rollup", d)) // q155's stage
-    graft.Staging.forget(graft.sources.CompactionStage.fragDir(d)) // q158
-    graft.Staging.forget(graft.sources.CompactionStage.compactDir(d))
-    graft.Staging.forget(graft.Staging.dirFor("sessstream", d)) // q159
-    graft.Staging.forget(graft.sources.SchemaEvolutionStage.evoDir(d)) // q166
-    graft.operators.TextAnalysis.forgetLexStages(d) // q168/q169
-    graft.Staging.forget(graft.Staging.dirFor("cdcstream", d)) // q172
-    graft.Staging.forget(s"${graft.Staging.dirFor("cdcsink", d)}@run")
+    graft.Staging.forgetCorpus(d)
     graft.streaming.Streaming.forgetTsField(d)
     graft.CacheRegistry.release(s)
     s.catalog.refreshByPath(d)
@@ -644,13 +607,14 @@ object Dedup {
         iter += 1
       }
       require(done, s"connected components did not converge in $maxIter rounds")
-      // materialize the final projection on the clone, then RE-ROOT the
-      // result in the caller's session: a frame left on the clone would
-      // silently plan every downstream op (as the left operand) with the
-      // loop's edge-sized shuffle parallelism
+      // plan the final projection on the clone, then RE-ROOT the result
+      // in the caller's session: a frame left on the clone would silently
+      // plan every downstream op (as the left operand) with the loop's
+      // edge-sized shuffle parallelism. Not checkpointed here: the one
+      // memoizing caller (nearDupClusters → SessionMemo.once)
+      // materializes it exactly once.
       val out = labels.select(col("v").as("doc_id"), col("lbl").as("keeper"))
         .orderBy("doc_id")
-        .localCheckpoint(true)
       base.createDataFrame(out.rdd, out.schema)
     }
   }

@@ -82,14 +82,8 @@ object DedupScale {
     val work = args.drop(1).headOption.filterNot(_.startsWith("--"))
       .getOrElse("/tmp/graft_dedup_scale")
     val skipGen = args.contains("--skip-gen")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
 
     def timed[T](phase: String)(body: => T): T = {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Full-scale proof for the GIF family (q330/q331) — the JpegScale
@@ -204,14 +203,7 @@ object GifScale {
     val nFiles = pos.headOption.map(_.toLong).getOrElse(4096L)
     val work = pos.drop(1).headOption.getOrElse("/tmp/graft_gif_scale")
     val skipGen = args.contains("--skip-gen")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     import spark.implicits._
     require(nFiles > CorruptTrail, s"need > $CorruptTrail files")
 

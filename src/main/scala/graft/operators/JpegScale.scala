@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Full-scale proof for the JPEG family (q315/q316) — the ArchiveScale
@@ -404,14 +403,7 @@ object JpegScale {
     val nFiles = pos.headOption.map(_.toLong).getOrElse(4096L)
     val work = pos.drop(1).headOption.getOrElse("/tmp/graft_jpeg_scale")
     val skipGen = args.contains("--skip-gen")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     import spark.implicits._
     require(nFiles > CorruptAcRun, s"need > $CorruptAcRun files")
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Relational 10× scale gate — the DedupScale/TriScale/EditScale/
@@ -92,15 +92,7 @@ object RelScale {
     val work = pos.drop(1).headOption.getOrElse(
       if (big3) "/tmp/graft_rel_100x" else "/tmp/graft_rel_10x")
     val skipGen = args.contains("--skip-gen")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
     val nL = 600000L * mult // lineitem
     val nO = 150000L * mult // orders

@@ -25,12 +25,13 @@ import org.apache.spark.sql.functions._
   *    caching the parsed frame — this shape doesn't).
   *
   * The stage (documents re-serialized as JSONL plus a shard with exactly
-  * [[NBadLines]] planted malformed lines) is written once per (JVM,
-  * corpus) under a temp root deleted on JVM exit, keyed by the md5 of the
-  * canonical corpus path behind a single-flight lock — the q105 stage
-  * lifecycle. The oracle then binds the full contract: every real line
-  * must parse (per-source counts/token sums/id ranges match the parquet
-  * truth) and exactly the planted lines must land in `_corrupt`.
+  * [[NBadLines]] planted malformed lines) is a [[graft.Staging]] stage:
+  * written once per corpus (single-flight, keyed by md5 of the canonical
+  * corpus path), durable across restarts under `-Dgraft.stage.dir`,
+  * forgotten with the corpus. The oracle then binds the full contract:
+  * every real line must parse (per-source counts/token sums/id ranges
+  * match the parquet truth) and exactly the planted lines must land in
+  * `_corrupt`.
   */
 object JsonlIngest {
 
@@ -43,40 +44,18 @@ object JsonlIngest {
     "[}")
   val NBadLines: Int = BadLines.length
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val stageLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  private lazy val stageRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-jsonl-")
-    sys.addShutdownHook {
-      def del(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(del)); p.delete(); ()
-      }
-      del(root.toFile)
-    }
-    root
-  }
-
   /** JSONL stage for corpus `d`: docs as JSON lines + the planted-bad
-    * shard. Written once per (JVM, corpus), single-flight. */
+    * shard. */
   def stage(s: SparkSession, d: String): String = {
-    val canon = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    stageLocks.getOrElseUpdate(key, new Object).synchronized {
-      staged.getOrElseUpdate(key, {
-        val dir = stageRoot.resolve(key).toString
-        graft.Tables.t(s, d, "documents")
-          .write.mode("overwrite").json(s"$dir/docs")
-        import s.implicits._
-        BadLines.toDF("value").coalesce(1)
-          .write.mode("overwrite").text(s"$dir/docs_bad")
-        dir
-      })
+    val dir = graft.Staging.dirFor("jsonl", d)
+    graft.Staging.once(dir) {
+      graft.Tables.t(s, d, "documents")
+        .write.mode("overwrite").json(s"$dir/docs")
+      import s.implicits._
+      BadLines.toDF("value").coalesce(1)
+        .write.mode("overwrite").text(s"$dir/docs_bad")
     }
+    dir
   }
 
   /** The documents contract, declared — plus the corrupt-record column. */

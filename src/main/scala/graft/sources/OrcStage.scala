@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * signature, so a single corrupted text byte anywhere in the roundtrip is
   * hash-visible in the oracle compare against the parquet originals.
   *
-  * Stage lifecycle = the q105/q117 discipline: written once per (JVM,
-  * corpus) under a temp root deleted on JVM exit, keyed by md5 of the
-  * canonical corpus path behind a single-flight lock.
+  * Stage lifecycle = a [[graft.Staging]] stage: written once per corpus
+  * (single-flight, keyed by md5 of the canonical corpus path), durable
+  * across restarts under `-Dgraft.stage.dir`, forgotten with the corpus.
   *
   * Scale notes: ORC scans are vectorized + whole-stage-codegen'd exactly
   * like parquet (same `FileScan` machinery, split-aligned parallel reads,
@@ -25,38 +25,15 @@ import org.apache.spark.sql.functions._
   */
 object OrcStage {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val stageLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  private lazy val stageRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-orc-")
-    sys.addShutdownHook {
-      def del(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(del)); p.delete(); ()
-      }
-      del(root.toFile)
-    }
-    root
-  }
-
-  /** ORC stage for corpus `d`: documents re-serialized as zstd ORC.
-    * Written once per (JVM, corpus), single-flight. */
+  /** ORC stage for corpus `d`: documents re-serialized as zstd ORC. */
   def stage(s: SparkSession, d: String): String = {
-    val canon = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    stageLocks.getOrElseUpdate(key, new Object).synchronized {
-      staged.getOrElseUpdate(key, {
-        val dir = stageRoot.resolve(key).toString
-        graft.Tables.t(s, d, "documents")
-          .write.mode("overwrite").option("compression", "zstd")
-          .orc(s"$dir/docs")
-        dir
-      })
+    val dir = graft.Staging.dirFor("orc", d)
+    graft.Staging.once(dir) {
+      graft.Tables.t(s, d, "documents")
+        .write.mode("overwrite").option("compression", "zstd")
+        .orc(s"$dir/docs")
     }
+    dir
   }
 
   /** Explicit schema on the read path — same schema-first contract as the

@@ -20,44 +20,22 @@ import org.apache.spark.sql.functions._
   * PartitionedStageSpec pins `PartitionFilters` in the executed plan and
   * that exactly one of the five lang directories is read.
   *
-  * Stage lifecycle = the q105/q117/q121 discipline: written once per
-  * (JVM, corpus) under a temp root deleted on JVM exit, keyed by md5 of
-  * the canonical corpus path behind a single-flight lock.
+  * Stage lifecycle = a [[graft.Staging]] stage: written once per corpus
+  * (single-flight, keyed by md5 of the canonical corpus path), durable
+  * across restarts under `-Dgraft.stage.dir`, forgotten with the corpus.
   */
 object PartitionedStage {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val stageLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  private lazy val stageRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-part-")
-    sys.addShutdownHook {
-      def del(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(del)); p.delete(); ()
-      }
-      del(root.toFile)
-    }
-    root
-  }
-
   /** Partitioned stage for corpus `d`: documents re-written under
-    * `lang=<v>/` hive directories. Written once per (JVM, corpus). */
+    * `lang=<v>/` hive directories. */
   def stage(s: SparkSession, d: String): String = {
-    val canon = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    stageLocks.getOrElseUpdate(key, new Object).synchronized {
-      staged.getOrElseUpdate(key, {
-        val dir = stageRoot.resolve(key).toString
-        graft.Tables.t(s, d, "documents")
-          .write.mode("overwrite").partitionBy("lang")
-          .parquet(s"$dir/docs")
-        dir
-      })
+    val dir = graft.Staging.dirFor("part", d)
+    graft.Staging.once(dir) {
+      graft.Tables.t(s, d, "documents")
+        .write.mode("overwrite").partitionBy("lang")
+        .parquet(s"$dir/docs")
     }
+    dir
   }
 
   def readPartitioned(s: SparkSession, dir: String): DataFrame =

@@ -30,9 +30,9 @@ import org.apache.spark.sql.functions._
   * through base64 (`unbase64(base64(text))`), documented here rather
   * than silently applied.
   *
-  * Stage lifecycle = the q105/q117/q121 discipline: written once per
-  * (JVM, corpus) under a temp root deleted on JVM exit, keyed by md5 of
-  * the canonical corpus path behind a single-flight lock.
+  * Stage lifecycle = a [[graft.Staging]] stage: written once per corpus
+  * (single-flight, keyed by md5 of the canonical corpus path), durable
+  * across restarts under `-Dgraft.stage.dir`, forgotten with the corpus.
   *
   * Scale notes: XML is a ROW format like JSONL — no column pruning, no
   * predicate pushdown into the scan (XmlIngestSpec shows the scan reads
@@ -44,39 +44,17 @@ import org.apache.spark.sql.functions._
   */
 object XmlStage {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val stageLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  private lazy val stageRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-xml-")
-    sys.addShutdownHook {
-      def del(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(del)); p.delete(); ()
-      }
-      del(root.toFile)
-    }
-    root
-  }
-
   /** XML stage for corpus `d`: documents re-serialized as `<doc>` row
-    * elements. Written once per (JVM, corpus), single-flight. */
+    * elements. */
   def stage(s: SparkSession, d: String): String = {
-    val canon = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    stageLocks.getOrElseUpdate(key, new Object).synchronized {
-      staged.getOrElseUpdate(key, {
-        val dir = stageRoot.resolve(key).toString
-        graft.Tables.t(s, d, "documents")
-          .write.mode("overwrite")
-          .option("rootTag", "corpus").option("rowTag", "doc")
-          .format("xml").save(s"$dir/docs")
-        dir
-      })
+    val dir = graft.Staging.dirFor("xml", d)
+    graft.Staging.once(dir) {
+      graft.Tables.t(s, d, "documents")
+        .write.mode("overwrite")
+        .option("rootTag", "corpus").option("rowTag", "doc")
+        .format("xml").save(s"$dir/docs")
     }
+    dir
   }
 
   def readXml(s: SparkSession, dir: String): DataFrame =

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 
 /** Per-micro-batch cost probe for the streaming harnesses (round-7
   * verdict #6: "break down q159's 3.07 s — measure it"). Runs q159's
@@ -14,14 +13,7 @@ import org.apache.spark.sql.SparkSession
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
     for (rep <- 1 to 3) {
       graft.Staging.forget(graft.Staging.dirFor("sessstream", d))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming decade-scale gate — the RelScale analog for the STATEFUL
@@ -84,15 +84,7 @@ object StreamScale {
     val mult = pos.headOption.map(_.toLong).getOrElse(100L)
     val work = pos.drop(1).headOption.getOrElse("/tmp/graft_stream_scale")
     val skipGen = args.contains("--skip-gen")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
     val nE = 100000L * mult
     val nD = 5000L * mult

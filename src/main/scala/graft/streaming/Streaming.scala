@@ -358,9 +358,8 @@ object Streaming {
   /** readStream over the events parquet; `ts` lands as TimestampType for
     * either physical generation (ns-as-long converted, us read directly).
     * The physical-type probe reads the batch parquet footer, so it is
-    * memoized per canonical dir (the ckptMemo pattern) — q97 builds two
-    * streams per invocation and would otherwise pay the footer read
-    * twice per run, every run. */
+    * memoized per canonical dir — q97 builds two streams per invocation
+    * and would otherwise pay the footer read twice per run, every run. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     // conf, not probe: the streaming read itself needs nanosAsLong on
     // THIS session (fresh clones don't share the memo's session), and
@@ -414,54 +413,36 @@ object Streaming {
   }
 
   /** Completed checkpoint for q142: a per-type count+sum aggregation run
-    * to completion with an explicit checkpointLocation. Written once per
-    * (JVM, corpus) — md5-keyed temp dir, single-flight, deleted on JVM
-    * exit (the q105/q121 stage discipline). */
-  private val ckptMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val ckptLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-  private lazy val ckptRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-")
-    sys.addShutdownHook {
-      def del(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(del)); p.delete(); ()
-      }
-      del(root.toFile)
-    }
-    root
-  }
-
+    * to completion with an explicit checkpointLocation. A
+    * [[graft.Staging]] stage: written once per corpus, durable across
+    * restarts under `-Dgraft.stage.dir`, forgotten with the corpus (the
+    * dir is wiped first, so a rebuild never resumes a stale checkpoint).
+    * The state-store provider class names the checkpoint's subdirectory:
+    * a checkpoint's state files are provider-formatted, so a RocksDB
+    * session must BUILD its own checkpoint rather than reuse one the
+    * HDFS-backed provider wrote — without this, StateStoreMatrixSpec's
+    * q142 RocksDB leg would silently re-read HDFS-provider state. */
   def stateCheckpoint(sp: SparkSession, d: String): String = {
-    val canon = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    // the provider class joins the memo key: a checkpoint's state files
-    // are provider-formatted, so a RocksDB session must BUILD its own
-    // checkpoint rather than reuse one the HDFS-backed provider wrote in
-    // the same JVM — without this, StateStoreMatrixSpec's q142 RocksDB
-    // leg would silently re-read HDFS-provider state (round-12, the
-    // round-11 verdict #6 config matrix)
     val provider = sp.conf.getOption(
       "spark.sql.streaming.stateStore.providerClass").getOrElse("default")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$canon|$provider"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    ckptLocks.getOrElseUpdate(key, new Object).synchronized {
-      ckptMemo.getOrElseUpdate(key, {
-        val ckpt = ckptRoot.resolve(key).toString
-        val name = s"graft_ckpt_${System.nanoTime()}"
-        val q = eventsStream(sp, d)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("sum_cents"))
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .format("memory").queryName(name)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        sp.catalog.dropTempView(name)
-        ckpt
-      })
+    val ckpt = s"${graft.Staging.dirFor("ckpt", d)}/$provider"
+    graft.Staging.once(ckpt) {
+      def del(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
+      }
+      del(new java.io.File(ckpt))
+      val name = s"graft_ckpt_${System.nanoTime()}"
+      val q = eventsStream(sp, d)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("sum_cents"))
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .format("memory").queryName(name)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      sp.catalog.dropTempView(name)
     }
+    ckpt
   }
 
   // ---- q172: streaming CDC sink (foreachBatch, idempotent LWW merge) --

@@ -4,7 +4,9 @@ package graft
   * in a row when hand-written (round-6 fix #7, round-7 verdict #3). Now
   * the README carries a machine-checked `SUITE_COUNT: N` marker and this
   * spec fails the build whenever N != SparkEntry.queries.size — the only
-  * way to add a query is to bump the README in the same change. */
+  * way to add a query is to bump the README in the same change. It also
+  * reads src/main so the session builder and the stage root each keep
+  * exactly one home (GraftSession, Staging). */
 class DocConsistencySpec extends SparkSpec {
 
   test("README SUITE_COUNT matches SparkEntry.queries.size") {
@@ -50,5 +52,27 @@ class DocConsistencySpec extends SparkSpec {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty,
       s"queries without oracle SQL (rows-only fallback): $missing")
+  }
+
+  test("one session builder and one stage root in src/main") {
+    // the copies this guards against: hand-built sessions in every main,
+    // and private TrieMap + temp root + shutdown hook stage memos
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, "src/main must be readable from the repo root")
+    def offenders(needle: String, home: String): Seq[String] = files
+      .filter(_.getFileName.toString != home)
+      .filter(f => java.nio.file.Files.readString(f).contains(needle))
+      .map(_.toString).sorted
+    val stray = Seq(
+      "SparkSession.builder()" -> offenders("SparkSession.builder()",
+        "GraftSession.scala"),
+      "createTempDirectory(" -> offenders("createTempDirectory(",
+        "Staging.scala"),
+      "addShutdownHook" -> offenders("addShutdownHook", "Staging.scala"))
+      .filter(_._2.nonEmpty)
+    assert(stray.isEmpty,
+      s"build sessions with GraftSession, stage through Staging: $stray")
   }
 }

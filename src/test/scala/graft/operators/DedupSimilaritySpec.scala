@@ -138,18 +138,34 @@ class DedupSimilaritySpec extends SparkSpec {
     val dir = tempDir("graft_inval").toString
     val full = spark.read.parquet(s"$sf0001/documents.parquet")
     full.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // the staged source queries (ORC q121, partitioned q130) must follow
+    // the rewrite too — every stage of the corpus, whatever its namespace
+    val staged = Seq(graft.sources.OrcStage.queries("q121_orc_ingest"),
+      graft.sources.PartitionedStage.queries("q130_partitioned_scan"))
+    def rows(d: String) = staged.map(_(spark, d).collect().toSeq)
+    val stagedBefore = rows(dir)
     val before = Dedup.nearDupClusters(spark, dir).count()
     assert(before > 0)
     // rewrite: keep every doc that is NOT a near-dup pair member, so the
-    // new corpus has strictly fewer clusterable docs
+    // new corpus has strictly fewer clusterable docs, and drop one source
     val members = Dedup.nearDupClusters(spark, dir)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    full.filter(!col("doc_id").isin(members.toSeq: _*))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val rewritten = full.filter(!col("doc_id").isin(members.toSeq: _*) &&
+      col("source") =!= "src0")
+    rewritten.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val fresh = tempDir("graft_inval_fresh").toString
+    rewritten.write.parquet(s"$fresh/documents.parquet")
     Dedup.invalidateClusters(spark, dir)
     val after = Dedup.nearDupClusters(spark, dir).count()
     assert(after < before,
       s"rewrite removed all $before pair members but recompute saw $after")
+    // booleans, not row dumps, in the failure messages
+    val stagedAfter = rows(dir)
+    val changed = stagedAfter != stagedBefore
+    assert(changed, "dropping a source must change q121/q130")
+    val matchesFresh = stagedAfter == rows(fresh)
+    assert(matchesFresh,
+      "staged queries after invalidation must equal a fresh copy's answers")
   }
 
   test("q64 simhash near-dup pairs overlap jaccard near-dups") {

@@ -20,9 +20,10 @@ import graft.functions.VectorExpressions
 class StageCrashSpec extends SparkSpec {
 
   /** Fresh corpus dir: symlinks to the sf0.001 tables → unique stage keys. */
-  private def mkCorpus(tag: String): String = {
+  private def mkCorpus(tag: String,
+      tables: Seq[String] = Seq("embeddings", "documents")): String = {
     val dir = tempDir(s"graft_crash_$tag")
-    for (tbl <- Seq("embeddings", "documents"))
+    for (tbl <- tables)
       java.nio.file.Files.createSymbolicLink(
         dir.resolve(s"$tbl.parquet"),
         java.nio.file.Paths.get(s"$sf0001/$tbl.parquet"))
@@ -176,5 +177,66 @@ class StageCrashSpec extends SparkSpec {
     graft.Staging.once(key, elsewhere) { builds += 1 }
     graft.Staging.once(key, elsewhere) { builds += 1 }
     assert(builds == 1, "explicit-path overload must stage exactly once")
+  }
+
+  test("forgetCorpus drops every key and marker of one corpus, no other") {
+    val (a, b) = (mkCorpus("forgetA"), mkCorpus("forgetB"))
+    def stage(key: String, data: String): Unit = graft.Staging.once(key) {
+      val f = new java.io.File(data, "part-0.parquet")
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.writeString(f.toPath, "x")
+    }
+    val plain = graft.Staging.dirFor("spec-fc", a)
+    val step = graft.Staging.dirFor("spec-fc2", a)
+    val sub = graft.Staging.dirFor("ann-inc", a) + "/codes" // hyphenated ns
+    val other = graft.Staging.dirFor("spec-fc", b)
+    stage(plain, plain)
+    stage(s"$step@step", step)
+    stage(s"$sub@base", sub)
+    stage(other, other)
+    val ofA = Seq(plain, s"$step@step", s"$sub@base")
+    // a crashed append's manifest is corpus state too
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$sub@delta.pre"), "")
+    (ofA :+ other).foreach { k =>
+      assert(graft.Staging.isStaged(k))
+      assert(new java.io.File(k + ".staged").isFile)
+    }
+
+    graft.Staging.forgetCorpus(a)
+    ofA.foreach { k =>
+      assert(!graft.Staging.isStaged(k), s"$k still staged")
+      assert(!new java.io.File(k + ".staged").exists, s"$k marker left")
+    }
+    assert(!new java.io.File(s"$sub@delta.pre").exists, "manifest left")
+    assert(graft.Staging.isStaged(other), "corpus B must stay staged")
+    assert(new java.io.File(other + ".staged").isFile, "B's marker must stay")
+  }
+
+  test("q132 served from a marker re-registers its bucketed tables") {
+    val corpus = mkCorpus("bkt", Seq("orders", "customer"))
+    val q132 = graft.sources.BucketedStage.queries("q132_bucketed_join")
+    val clean = q132(spark, corpus).collect().toSeq
+    val dir = graft.Staging.dirFor("bkt", corpus)
+    def stamps = listParquet(dir).map(f => f -> new java.io.File(f).lastModified)
+    val before = stamps
+    assert(before.nonEmpty && new java.io.File(dir + ".staged").isFile)
+
+    // restart: the in-memory catalog and the memo are gone, files and
+    // marker stay (the tables are external, so DROP keeps their files)
+    val db = graft.sources.BucketedStage.stage(spark, corpus)
+    Seq("orders_b", "customer_b").foreach(t => spark.sql(s"DROP TABLE $db.$t"))
+    graft.Staging.dropMemoForTest(dir)
+
+    val df = q132(spark, corpus)
+    assert(df.collect().toSeq == clean, "marker-served q132 must not change")
+    assert(stamps == before, "a marker-served stage must not be rewritten")
+    assert(df.queryExecution.executedPlan.toString
+      .contains("SelectedBucketsCount"), "re-registered tables stay bucketed")
+
+    // invalidation rebuilds over the registered external tables
+    graft.Staging.forgetCorpus(corpus)
+    assert(q132(spark, corpus).collect().toSeq == clean)
+    assert(stamps != before, "a forgotten stage must be rewritten")
   }
 }
