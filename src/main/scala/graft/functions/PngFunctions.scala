@@ -20,11 +20,7 @@ object PngHeader {
   private val Sig = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
     .map(_.toByte)
 
-  /** Decoded-scanline allocation cap (256 MiB ≈ a 9k×9k RGBA frame):
-    * dims past this are treated as malformed, not allocated. */
-  private val MaxDecodedBytes = 256L * 1024 * 1024
-
-  private def be32(b: Array[Byte], o: Int): Long =
+  private[functions] def be32(b: Array[Byte], o: Int): Long =
     ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
       ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
 
@@ -42,145 +38,22 @@ object PngHeader {
       (b(24) & 0xFF).toLong, (b(25) & 0xFF).toLong)
   }
 
-  /** Full pixel-stream decode (q167) — the step PAST the header: walk the
-    * chunk list collecting every IDAT payload, zlib-INFLATE the scanline
-    * stream (java.util.zip.Inflater — in the JDK, not an imaging
-    * library), reverse the per-scanline filter (all five spec filter
-    * types: None/Sub/Up/Average/Paeth — the committed fixture set
-    * exercises each), and reduce the reconstructed channel samples to
-    * struct(n_samples, px_min, px_max, px_sum, px_sumsq) — the 1BRC-style
-    * mergeable state, exact BIGINTs (sumsq ≤ 2^16 per 8-bit sample). The
-    * payload never leaves the scan as rows: ~40 bytes per image cross the
-    * shuffle, never the pixels. Scope: 8-bit depth, truecolor RGB(A)
-    * (color types 2/6), non-interlaced — null for anything else or any
-    * malformed byte (bad CRC length walk, short inflate, bad filter
-    * tag), never garbage. */
-  /** Decoded 8-bit RGB(A) scanline stream: samples reconstructed IN
-    * PLACE in `raw` (index y*(1+width*nchan) keeps the filter tag, the
-    * unfiltered samples follow it) — shared by [[pixelStats]] and
-    * [[ahash64]]. */
-  private[functions] final class Decoded(
-      val width: Int, val height: Int, val nchan: Int, val raw: Array[Byte])
-
-  /** Chunk walk + zlib inflate + in-place unfilter; null for any
-    * malformed input (the decode-to-null contract both consumers share). */
-  private def decodeUnfiltered(b: Array[Byte]): Decoded = {
-    if (b == null || b.length < 33) return null
-    val h = ihdr(b)
-    if (h == null) return null
-    val width = h.getLong(0).toInt
-    val height = h.getLong(1).toInt
-    val depth = h.getLong(2)
-    val colorType = h.getLong(3)
-    // compression(26)=deflate, filter(27)=adaptive, interlace(28)=none
-    if (depth != 8L || b(26) != 0 || b(27) != 0 || b(28) != 0) return null
-    val nchan = colorType match {
-      case 2L => 3
-      case 6L => 4
-      case _ => return null
-    }
-    if (width <= 0 || height <= 0) return null
-    // chunk walk from the first post-IHDR chunk, concatenating IDAT
-    // payloads (the spec allows the stream split across many chunks)
-    var pos = 33
-    val idat = new java.io.ByteArrayOutputStream()
-    var ended = false
-    while (!ended && pos + 8 <= b.length) {
-      val size = be32(b, pos)
-      if (size < 0 || pos + 12 + size > b.length) return null
-      if (b(pos + 4) == 'I' && b(pos + 5) == 'D' &&
-        b(pos + 6) == 'A' && b(pos + 7) == 'T')
-        idat.write(b, pos + 8, size.toInt)
-      else if (b(pos + 4) == 'I' && b(pos + 5) == 'E' &&
-        b(pos + 6) == 'N' && b(pos + 7) == 'D')
-        ended = true
-      pos += 12 + size.toInt // length + tag + payload + crc
-    }
-    if (idat.size() == 0) return null
-    // size the scanline buffer in LONG first: a hostile IHDR with large
-    // 32-bit dims would overflow an Int product (negative allocation or
-    // a wrong-but-positive size) — and even a valid product must clear a
-    // sanity cap before we allocate multi-GB for what claims to be an
-    // image (decode-to-null, never decode-to-OOM)
-    val strideL = width.toLong * nchan
-    val expectedL = height.toLong * (1L + strideL)
-    if (expectedL <= 0L || expectedL > MaxDecodedBytes) return null
-    val stride = strideL.toInt
-    val expected = expectedL.toInt
-    val raw = new Array[Byte](expected)
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(idat.toByteArray)
-      var off = 0
-      while (off < expected && !inf.finished()) {
-        val n = inf.inflate(raw, off, expected - off)
-        // zero progress while unfinished = truncated input, a
-        // preset-dictionary stream (needsDictionary — inflate would
-        // return 0 forever), or a stall: all decode to null
-        if (n == 0 && !inf.finished()) return null
-        off += n
-      }
-      if (off != expected) return null
-    } catch {
-      case _: java.util.zip.DataFormatException => return null
-    } finally inf.end()
-    // unfilter scanline-by-scanline IN PLACE; bpp = nchan for 8-bit
-    val cur = new Array[Int](stride)
-    val prior = new Array[Int](stride)
-    var y = 0
-    while (y < height) {
-      val base = y * (1 + stride)
-      val f = raw(base) & 0xFF
-      if (f > 4) return null
-      var i = 0
-      while (i < stride) {
-        val x = raw(base + 1 + i) & 0xFF
-        val left = if (i >= nchan) cur(i - nchan) else 0
-        val up = prior(i)
-        val upLeft = if (i >= nchan) prior(i - nchan) else 0
-        val pred = f match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) / 2
-          case 4 => // Paeth
-            val p = left + up - upLeft
-            val pa = math.abs(p - left)
-            val pb = math.abs(p - up)
-            val pc = math.abs(p - upLeft)
-            if (pa <= pb && pa <= pc) left else if (pb <= pc) up else upLeft
-        }
-        val v = (x + pred) & 0xFF
-        cur(i) = v
-        raw(base + 1 + i) = v.toByte
-        i += 1
-      }
-      System.arraycopy(cur, 0, prior, 0, stride)
-      y += 1
-    }
-    new Decoded(width, height, nchan, raw)
-  }
-
+  /** Full pixel-stream decode (q167) — the step PAST the header: the
+    * truecolor profile of [[PngFull]]'s decoder (chunk walk, zlib
+    * inflate, all five scanline filters — the committed fixture set
+    * exercises each), the reconstructed channel samples reduced to
+    * struct(n_samples, px_min, px_max, px_sum, px_sumsq) — the
+    * 1BRC-style mergeable state, exact BIGINTs (sumsq ≤ 2^16 per 8-bit
+    * sample). The payload never leaves the scan as rows: ~40 bytes per
+    * image cross the shuffle, never the pixels. Scope: 8-bit depth,
+    * truecolor RGB(A) (color types 2/6), non-interlaced — null for
+    * anything else or any malformed byte (bad chunk length walk, no
+    * IEND, short or surplus inflate, bad filter tag), never garbage. */
   def pixelStats(b: Array[Byte]): InternalRow = {
-    val dec = decodeUnfiltered(b)
-    if (dec == null) return null
-    val stride = dec.width * dec.nchan
-    var n = 0L; var mn = Long.MaxValue; var mx = Long.MinValue
-    var sum = 0L; var sumsq = 0L
-    var y = 0
-    while (y < dec.height) {
-      val base = y * (1 + stride) + 1
-      var i = 0
-      while (i < stride) {
-        val vl = (dec.raw(base + i) & 0xFF).toLong
-        if (vl < mn) mn = vl
-        if (vl > mx) mx = vl
-        sum += vl; sumsq += vl * vl; n += 1
-        i += 1
-      }
-      y += 1
-    }
-    InternalRow(n, mn, mx, sum, sumsq)
+    val im = PngFull.truecolor(b)
+    if (im == null) return null
+    val s = PngFull.stats(im)
+    InternalRow(im.width.toLong * im.height * im.nchan, s(0), s(1), s(2), s(3))
   }
 
   /** 64-bit average-hash (q200): integer luma (299R+587G+114B)/1000 per
@@ -194,22 +67,20 @@ object PngHeader {
     * malformed input. Alpha is ignored: perceptual identity lives in
     * the color channels. */
   def ahash64(b: Array[Byte]): java.lang.Long = {
-    val dec = decodeUnfiltered(b)
-    if (dec == null || dec.width < 8 || dec.height < 8) return null
-    val w = dec.width; val h = dec.height; val nc = dec.nchan
-    val stride = w * nc
+    val im = PngFull.truecolor(b)
+    if (im == null || im.width < 8 || im.height < 8) return null
+    val w = im.width; val h = im.height
     val csum = new Array[Long](64)
     val ccnt = new Array[Long](64)
     var y = 0
     while (y < h) {
-      val base = y * (1 + stride) + 1
       val gy = y * 8 / h
       var x = 0
       while (x < w) {
-        val o = base + x * nc
-        val r = dec.raw(o) & 0xFF
-        val g = dec.raw(o + 1) & 0xFF
-        val bl = dec.raw(o + 2) & 0xFF
+        val o = im.at(x, y)
+        val r = im.px(o) & 0xFF
+        val g = im.px(o + 1) & 0xFF
+        val bl = im.px(o + 2) & 0xFF
         val c = (gy << 3) | (x * 8 / w)
         csum(c) += (299 * r + 587 * g + 114 * bl) / 1000
         ccnt(c) += 1
@@ -239,14 +110,13 @@ object PngHeader {
     * checksum. Null for anything [[pixelStats]] rejects or smaller
     * than 2×2 (an empty block must not fabricate pixels). */
   def box2Stats(b: Array[Byte]): InternalRow = {
-    val dec = decodeUnfiltered(b)
-    if (dec == null || dec.width < 2 || dec.height < 2) return null
-    val w = dec.width; val h = dec.height; val nc = dec.nchan
-    val stride = w * nc
+    val im = PngFull.truecolor(b)
+    if (im == null || im.width < 2 || im.height < 2) return null
+    val w = im.width; val h = im.height
     def luma(x: Int, y: Int): Long = {
-      val o = y * (1 + stride) + 1 + x * nc
-      (299L * (dec.raw(o) & 0xFF) + 587L * (dec.raw(o + 1) & 0xFF) +
-        114L * (dec.raw(o + 2) & 0xFF)) / 1000L
+      val o = im.at(x, y)
+      (299L * (im.px(o) & 0xFF) + 587L * (im.px(o + 1) & 0xFF) +
+        114L * (im.px(o + 2) & 0xFF)) / 1000L
     }
     val ow = w / 2; val oh = h / 2
     var n = 0L; var mn = Long.MaxValue; var mx = Long.MinValue
@@ -272,52 +142,28 @@ object PngHeader {
 
 /** png_ihdr(content) -> struct<width, height, bit_depth, color_type: long>,
   * null for non-PNG bytes. */
-case class PngIhdr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("width", LongType), StructField("height", LongType),
-    StructField("bit_depth", LongType), StructField("color_type", LongType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "png_ihdr"
-
-  override def nullSafeEval(v: Any): Any =
-    PngHeader.ihdr(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |${ev.value} = graft.functions.PngHeader.ihdr($b);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class PngIhdr(child: Expression) extends DecodeExpr("png_ihdr",
+    StructType(Seq(
+      StructField("width", LongType), StructField("height", LongType),
+      StructField("bit_depth", LongType), StructField("color_type", LongType))),
+    "graft.functions.PngHeader.ihdr") {
+  def decode(b: Array[Byte]): Any = PngHeader.ihdr(b)
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
 }
 
 /** png_pixels(content) -> struct<n_samples, px_min, px_max, px_sum,
   * px_sumsq: long>, null for non-PNG bytes or unsupported layouts
   * (see [[PngHeader.pixelStats]]). */
-case class PngPixels(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_samples", LongType), StructField("px_min", LongType),
-    StructField("px_max", LongType), StructField("px_sum", LongType),
-    StructField("px_sumsq", LongType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "png_pixels"
-
-  override def nullSafeEval(v: Any): Any =
-    PngHeader.pixelStats(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |${ev.value} = graft.functions.PngHeader.pixelStats($b);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class PngPixels(child: Expression) extends DecodeExpr("png_pixels",
+    StructType(Seq(
+      StructField("n_samples", LongType), StructField("px_min", LongType),
+      StructField("px_max", LongType), StructField("px_sum", LongType),
+      StructField("px_sumsq", LongType))),
+    "graft.functions.PngHeader.pixelStats") {
+  def decode(b: Array[Byte]): Any = PngHeader.pixelStats(b)
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
 }
 
 /** png_ahash(content) -> 64-bit perceptual average-hash (long), null for
@@ -347,28 +193,16 @@ case class PngAhash(child: Expression) extends UnaryExpression {
   * px_sum, px_sumsq, checksum: long> — the 2×2 luma box-downsample
   * reduced in-expression (q266), null for non-decodable bytes or
   * images under 2×2. */
-case class PngBox2(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("out_w", LongType), StructField("out_h", LongType),
-    StructField("n_px", LongType), StructField("px_min", LongType),
-    StructField("px_max", LongType), StructField("px_sum", LongType),
-    StructField("px_sumsq", LongType), StructField("checksum", LongType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "png_box2"
-
-  override def nullSafeEval(v: Any): Any =
-    PngHeader.box2Stats(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |${ev.value} = graft.functions.PngHeader.box2Stats($b);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class PngBox2(child: Expression) extends DecodeExpr("png_box2",
+    StructType(Seq(
+      StructField("out_w", LongType), StructField("out_h", LongType),
+      StructField("n_px", LongType), StructField("px_min", LongType),
+      StructField("px_max", LongType), StructField("px_sum", LongType),
+      StructField("px_sumsq", LongType), StructField("checksum", LongType))),
+    "graft.functions.PngHeader.box2Stats") {
+  def decode(b: Array[Byte]): Any = PngHeader.box2Stats(b)
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
 }
 
 object PngFunctions {

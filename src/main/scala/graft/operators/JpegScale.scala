@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * tables, byte stuffing) — independent of both the Python fixture
   * generator and the DECODE direction of the production expressions.
   * The expected pixel totals recompute with Spark-parallel per-file
-  * formula math sharing only [[graft.functions.JpegPixels.K]]/ZZ (the
+  * formula math sharing only [[graft.functions.JpegCodec.K]]/ZZ (the
   * fixed-point IDCT constants are the contract, already 3-way validated
   * at fixture scale); the Huffman/entropy layer is genuinely round-
   * tripped: the gate's bytes were ENCODED by this writer and DECODED by
@@ -353,8 +353,8 @@ object JpegScale {
     var bi = 0
     var pSum = 0L
     var pSq = 0L
-    val K = graft.functions.JpegPixels.K
-    val ZZ = graft.functions.JpegPixels.ZZ
+    val K = graft.functions.JpegCodec.K
+    val ZZ = graft.functions.JpegCodec.ZZ
     val q = qzz(i)
     val m = Array.ofDim[Long](8, 8)
     while (bi < BlocksPerFile) {

@@ -765,7 +765,7 @@ object Multimodal {
     }),
 
     "q333_png_full" -> ((s, d) => {
-      // FULL-PROFILE PNG decode — the rungs q167's truecolor decoder
+      // FULL-PROFILE PNG decode — the rungs q167's truecolor png_pixels
       // left out, closed the way q326/q332 closed JPEG's (mechanism on
       // PngFull): grayscale, PALETTE (indexes through the PLTE chunk,
       // out-of-range index voids), RGBA, and ADAM7 INTERLACE — seven
@@ -775,7 +775,7 @@ object Multimodal {
       // passes. q167's png_pixels keeps its historical contract and
       // PngFullSpec pins the within-format layer split (new profiles
       // void under the old expression) plus px_sum equality between
-      // the two decoders on the shared truecolor profile. Oracle =
+      // the two functions on the shared truecolor profile. Oracle =
       // generator manifest, stats from the planted sample formulas —
       // never from a decoder. The three planted corruptions (palette
       // overrun, truncated IDAT, surplus scanlines in a valid zlib
@@ -920,7 +920,7 @@ object Multimodal {
       // scans, AC first scans with End-Of-Band RUNS, AC refinement with
       // the correction-bit walk — assembling the coefficient matrix
       // across scans and rendering through the SAME fixed-point IDCT as
-      // q316 (JpegPixels.Surface: one shared tail, two entropy layers).
+      // q316 (JpegCodec's render tail: one shared tail, two entropy layers).
       // The fixture set carries a baseline TWIN built from identical
       // coefficients: both decoders run in ONE projection and exactly
       // one is non-null per file — the q316/q326 profile split is

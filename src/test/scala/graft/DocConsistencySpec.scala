@@ -6,7 +6,8 @@ package graft
   * spec fails the build whenever N != SparkEntry.queries.size — the only
   * way to add a query is to bump the README in the same change. It also
   * reads src/main so the session builder and the stage root each keep
-  * exactly one home (GraftSession, Staging). */
+  * exactly one home (GraftSession, Staging), and the JPEG and PNG codecs
+  * each keep one core. */
 class DocConsistencySpec extends SparkSpec {
 
   test("README SUITE_COUNT matches SparkEntry.queries.size") {
@@ -74,5 +75,25 @@ class DocConsistencySpec extends SparkSpec {
       .filter(_._2.nonEmpty)
     assert(stray.isEmpty,
       s"build sessions with GraftSession, stage through Staging: $stray")
+  }
+
+  test("one JPEG codec core and one PNG decoder in src/main") {
+    // the copies this guards against: a private Malformed class and an
+    // IDCT per JPEG pixel decoder, and a second chunk-walk/inflate path
+    // beside PngFull's
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/functions")
+    def count(prefix: String, needle: String): Int =
+      java.nio.file.Files.list(dir).toArray
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith(prefix))
+        .map(f => java.nio.file.Files.readString(f)
+          .split(java.util.regex.Pattern.quote(needle), -1).length - 1)
+        .sum
+    val counts = Seq(
+      "Jpeg" -> "class Malformed", "Jpeg" -> "(1L << 21)",
+      "Png" -> "new java.util.zip.Inflater")
+      .map { case (prefix, needle) => s"$prefix*: $needle" -> count(prefix, needle) }
+    assert(counts.forall(_._2 == 1),
+      s"each must appear exactly once — decode through JpegCodec / PngFull: $counts")
   }
 }

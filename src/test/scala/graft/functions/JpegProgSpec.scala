@@ -43,8 +43,8 @@ class JpegProgSpec extends SparkSpec {
   }
 
   test("baseline twin: two entropy layers, one pixel surface") {
-    val prog = JpegProg.decode(fixture("prog_twin.jpg"))
-    val base = JpegPixels.decode(fixture("twin_base.jpg"))
+    val prog = JpegCodec.progPixels(fixture("prog_twin.jpg"))
+    val base = JpegCodec.pixels(fixture("twin_base.jpg"))
     assert(prog != null && base != null)
     // struct: width, height, n_blocks, n_rst, px_min, px_max, px_sum,
     // px_sqsum, px_crc32 — everything but the byte-layout must agree
@@ -56,10 +56,10 @@ class JpegProgSpec extends SparkSpec {
 
   test("truncation at every byte voids, never mis-decodes") {
     val good = fixture("prog_small.jpg")
-    assert(JpegProg.decode(good) != null)
+    assert(JpegCodec.progPixels(good) != null)
     var cut = 2
     while (cut < good.length) {
-      assert(JpegProg.decode(java.util.Arrays.copyOf(good, cut)) == null,
+      assert(JpegCodec.progPixels(java.util.Arrays.copyOf(good, cut)) == null,
         s"truncated at $cut must void")
       cut += 1
     }
@@ -72,11 +72,11 @@ class JpegProgSpec extends SparkSpec {
     while (!((good(i) & 0xFF) == 0xFF && (good(i + 1) & 0xFF) == 0xDA)) i += 1
     val flipped = good.clone()
     flipped(i + 1) = 0x7A.toByte // reserved range: walk must fail
-    assert(JpegProg.decode(flipped) == null)
+    assert(JpegCodec.progPixels(flipped) == null)
     val trailing = java.util.Arrays.copyOf(good, good.length + 3)
     trailing(good.length) = 0x41
-    assert(JpegProg.decode(trailing) == null, "bytes after EOI must void")
-    assert(JpegProg.decode(fixture("corrupt_truncated.jpg")) == null,
+    assert(JpegCodec.progPixels(trailing) == null, "bytes after EOI must void")
+    assert(JpegCodec.progPixels(fixture("corrupt_truncated.jpg")) == null,
       "the planted mid-scan truncation must void")
   }
 }

@@ -4,15 +4,15 @@ import graft.SparkSpec
 
 /** q333's laws: the within-format layer split (q167's png_pixels keeps
   * its historical truecolor non-interlaced contract; the new profiles
-  * decode only under png_full), cross-decoder agreement on the shared
-  * profile, corruption voiding. */
+  * decode only under png_full, though both run PngFull's decoder),
+  * cross-function agreement on the shared profile, corruption voiding. */
 class PngFullSpec extends SparkSpec {
 
   private def fx(name: String): Array[Byte] =
     java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(graft.Fixtures.path("png_full"), name))
 
-  test("within-format split: new profiles void under q167's decoder") {
+  test("within-format split: new profiles void under png_pixels") {
     Seq("full_gray.png", "full_palette.png", "full_gray_i7.png",
       "full_rgb_i7.png", "full_palette_i7.png", "full_rgba_i7.png")
       .foreach { n =>

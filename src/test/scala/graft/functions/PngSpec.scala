@@ -143,4 +143,50 @@ class PngSpec extends SparkSpec {
     assert(decoded.forall(_.isNullAt(0)),
       "malformed PNG bytes must decode to null")
   }
+
+  test("q167: truecolor functions void without IEND or with surplus scanline data") {
+    // png_pixels / png_ahash / png_box2 share png_full's well-formedness
+    // rule: IEND is required, and an IDAT stream that inflates to more
+    // scanlines than the IHDR geometry demands voids the file
+    val good = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(graft.Fixtures.path("png/img_c.png"))) // 16x16 RGB
+    def be32(v: Long): Array[Byte] = Array(
+      (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
+    def chunk(tag: String, data: Array[Byte]): Array[Byte] = {
+      val crc = new java.util.zip.CRC32
+      crc.update(tag.getBytes("ISO-8859-1")); crc.update(data)
+      be32(data.length) ++ tag.getBytes("ISO-8859-1") ++ data ++ be32(crc.getValue)
+    }
+    val iendAt = good.length - 12
+    assert(new String(good, iendAt + 4, 4, "ISO-8859-1") == "IEND")
+    assert(new String(good, 37, 4, "ISO-8859-1") == "IDAT") // the only IDAT
+    val idatLen = ((good(33) & 0xFF) << 24) | ((good(34) & 0xFF) << 16) |
+      ((good(35) & 0xFF) << 8) | (good(36) & 0xFF)
+    val inf = new java.util.zip.Inflater()
+    inf.setInput(good, 41, idatLen)
+    val scanlines = new Array[Byte](16 * (1 + 16 * 3))
+    assert(inf.inflate(scanlines) == scanlines.length && inf.finished())
+    inf.end()
+    def rebuilt(raw: Array[Byte]): Array[Byte] = {
+      val d = new java.util.zip.Deflater()
+      d.setInput(raw); d.finish()
+      val buf = new Array[Byte](raw.length + 64)
+      val n = d.deflate(buf)
+      assert(d.finished()); d.end()
+      good.take(33) ++ chunk("IDAT", buf.take(n)) ++ chunk("IEND", Array.emptyByteArray)
+    }
+    val exact = rebuilt(scanlines)
+    val surplus = rebuilt(scanlines ++ new Array[Byte](1 + 16 * 3))
+    val noIend = good.take(iendAt)
+    val fns: Seq[(String, Array[Byte] => Any)] = Seq(
+      "png_pixels" -> PngHeader.pixelStats, "png_ahash" -> (b => PngHeader.ahash64(b)),
+      "png_box2" -> PngHeader.box2Stats)
+    fns.foreach { case (fn, f) =>
+      assert(f(good) != null && f(exact) != null, s"$fn must decode the intact file")
+      assert(String.valueOf(f(exact)) == String.valueOf(f(good)),
+        s"$fn: re-deflating the same scanlines must not move the result")
+      assert(f(noIend) == null, s"$fn must void a file without IEND")
+      assert(f(surplus) == null, s"$fn must void a surplus scanline")
+    }
+  }
 }

@@ -17,7 +17,7 @@ IDCT the Scala decoder runs:
 
 with K the 8x8 integer cosine matrix below (round(1024*c(u)*cos((2x+1)
 u*pi/16)), c(0)=1/sqrt(2)) embedded AS THE SAME LITERALS in
-JpegFunctions.scala — integer-only arithmetic end to end, so the two
+JpegCodec.scala — integer-only arithmetic end to end, so the two
 implementations cannot drift by a ULP (the q246 shared-constant
 discipline applied to a whole transform).
 
@@ -33,7 +33,7 @@ import os, struct, zlib
 
 OUT = os.path.join(os.path.dirname(__file__), "..", "fixtures", "jpeg_decode")
 
-# shared integer IDCT matrix — keep byte-identical with JpegFunctions.scala
+# shared integer IDCT matrix — keep byte-identical with JpegCodec.scala
 K = [
     [724, 1004, 946, 851, 724, 569, 392, 200],
     [724, 851, 392, -200, -724, -1004, -946, -569],
@@ -396,7 +396,7 @@ if __name__ == "__main__":
 # ---------------------------------------------------------------------------
 # q325: color 4:2:0 fixtures (fixtures/jpeg_color) — JFIF YCbCr->RGB in
 # 2^16 fixed point; keep the four constants byte-identical with
-# JpegFunctions.scala JpegRgb
+# JpegCodec.scala (CrR/CbG/CrG/CbB)
 # ---------------------------------------------------------------------------
 COLOR_OUT = os.path.join(os.path.dirname(__file__), "..", "fixtures", "jpeg_color")
 CR_R, CB_G, CR_G, CB_B = 91881, 22554, 46802, 116130
@@ -490,7 +490,7 @@ def build_color_file(width, height, kind, q_seed, rst_interval=0):
     data = head + bytes(body) + b"\xFF\xD9"
 
     # expected RGB surface: per-MCU IDCT, NN chroma upsample, fixed-point
-    # JFIF conversion — the SAME integer ops as JpegRgb.decode
+    # JFIF conversion — the SAME integer ops as JpegCodec's render tail
     rgb = bytearray(width * height * 3)
     pmin, pmax, psum, psq = 255, 0, 0, 0
     for mi, blocks in enumerate(mcu_blocks):
