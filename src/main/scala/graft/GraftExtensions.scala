@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{BrcParseLine, BrcStation, BrcTenths, CosineSimilarity, RollingHash}
+import graft.functions.{BrcStation, BrcTenths, CosineSimilarity, RollingHash}
 
 /** SparkSessionExtensions entry point: makes the custom expressions
   * first-class SQL functions in any session configured with
@@ -32,9 +32,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "rolling_window_hashes"),
       (exprs: Seq[Expression]) =>
         graft.functions.VectorExpressions.rollingWindowHashesBuilder(exprs)))
-    e.injectFunction((FunctionIdentifier("brc_parse"),
-      new ExpressionInfo(classOf[BrcParseLine].getName, "brc_parse"),
-      (exprs: Seq[Expression]) => BrcParseLine(exprs.head)))
     e.injectFunction((FunctionIdentifier("brc_station"),
       new ExpressionInfo(classOf[BrcStation].getName, "brc_station"),
       (exprs: Seq[Expression]) => BrcStation(exprs.head)))

@@ -1,5 +1,6 @@
 package graft.onebrc
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Standalone throughput benchmark at the reference's own scale
@@ -8,10 +9,13 @@ import org.apache.spark.sql.functions._
   *
   *   sbt "runMain graft.onebrc.BrcScale 1000000000 /tmp/brc"
   *
-  * Generates measurements with the seeded generator, writes both the
-  * reference's CSV format and Parquet (the format a 100 TB deployment
-  * would actually use), then times the flagship query on each, twice
-  * (cold + warm), printing one JSON line per measurement.
+  * Generates measurements with the seeded generator, writes the
+  * reference's text format and Parquet (the format a 100 TB deployment
+  * would actually use), then times the flagship query on four paths —
+  * the CSV datasource, the `brc` DataSource V2 connector, parquet and
+  * integer-tenths parquet — twice each (cold + warm), printing one JSON
+  * line per measurement and one `{"check":"<path>-vs-csv",...}` line per
+  * path (the warm answers must be identical).
   */
 object BrcScale {
   def main(args: Array[String]): Unit = {
@@ -66,80 +70,29 @@ object BrcScale {
     // warm-pass results are cross-checked at the end: every scan path must
     // produce the identical 413-row answer at full scale (a silent parser
     // domain mismatch in one path would otherwise hide in the timings)
-    val results = scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
-    def remember(name: String, rows: Array[org.apache.spark.sql.Row]): Unit =
-      results(name) = rows.map(_.toString).toSeq
-    for (pass <- Seq("cold", "warm")) {
-      val (r, t1) = timed {
-        OneBrc.brcAgg(OneBrc.readMeasurements(spark, s"$dir/csv")).collect()
-      }
-      report(s"brc_csv_$pass", t1); remember("csv", r)
-    }
-    for (pass <- Seq("cold", "warm")) {
-      val (r, t3) = timed {
-        OneBrc.brcAgg(OneBrc.readMeasurementsFast(spark, s"$dir/csv")).collect()
-      }
-      report(s"brc_text_split_$pass", t3); remember("split", r)
-    }
-    for (pass <- Seq("cold", "warm")) {
-      // single-pass codegen parser expression (BrcParseLine)
-      val (r, t4) = timed {
-        OneBrc.brcAgg(OneBrc.readMeasurementsTurbo(spark, s"$dir/csv")).collect()
-      }
-      report(s"brc_text_turbo_$pass", t4); remember("turbo", r)
-    }
-    for (pass <- Seq("cold", "warm")) {
-      // split primitive expressions + integer-tenths aggregation: the
-      // allocation-free text path (brc_station/brc_tenths)
-      val (r, t5) = timed {
-        OneBrc.brcAggTenths(OneBrc.readMeasurementsTenths(spark, s"$dir/csv"))
-          .collect()
-      }
-      report(s"brc_text_tenths_$pass", t5); remember("tenths", r)
-    }
-    for (pass <- Seq("cold", "warm")) {
+    val paths = Seq[(String, String, () => DataFrame)](
+      ("csv", "brc_csv", () => OneBrc.brcAgg(OneBrc.readMeasurements(spark, s"$dir/csv"))),
       // DataSource V2: fused line-split+parse connector, reused buffers
-      val (r, t6) = timed {
-        OneBrc.brcAggTenths(OneBrc.readMeasurementsV2(spark, s"$dir/csv"))
-          .collect()
-      }
-      report(s"brc_text_dsv2_$pass", t6); remember("dsv2", r)
-    }
-    for (pass <- Seq("cold", "warm")) {
-      val (r, t2) = timed {
-        OneBrc.brcAgg(spark.read.parquet(s"$dir/parquet")
-          .select(col("station"), col("measure"))).collect()
-      }
-      report(s"brc_parquet_$pass", t2); remember("parquet", r)
-    }
-    for (pass <- Seq("cold", "warm")) {
+      ("dsv2", "brc_text_dsv2", () =>
+        OneBrc.brcAggTenths(OneBrc.readMeasurementsV2(spark, s"$dir/csv"))),
+      ("parquet", "brc_parquet", () => OneBrc.brcAgg(
+        spark.read.parquet(s"$dir/parquet").select(col("station"), col("measure")))),
       // tenths-schema parquet: long decode + integer-only aggregation —
       // the fastest deployment-format path (beats the reference's 8 s
       // hand-tuned AVX2 number; see README scale table)
-      val (r, t7) = timed {
-        OneBrc.brcAggTenths(spark.read.parquet(s"$dir/parquet_tenths"))
-          .collect()
-      }
-      report(s"brc_parquet_tenths_$pass", t7); remember("parquet_tenths", r)
+      ("parquet_tenths", "brc_parquet_tenths", () =>
+        OneBrc.brcAggTenths(spark.read.parquet(s"$dir/parquet_tenths"))))
+    val results = paths.map { case (name, phase, query) =>
+      val warm = Seq("cold", "warm").map { pass =>
+        val (r, t) = timed(query().collect())
+        report(s"${phase}_$pass", t); r
+      }.last
+      name -> warm.map(_.toString).toSeq
     }
     for ((name, r) <- results) {
-      val ok = r == results("csv")
+      val ok = r == results.head._2
       println(s"""{"check":"$name-vs-csv","equal":$ok,"rows":${r.length}}""")
       if (!ok) sys.error(s"path $name disagrees with the CSV datasource path")
-    }
-
-    if (args.contains("--sweep-split-size")) {
-      // maxPartitionBytes is Spark's CHUNK_SIZE (the knob the reference
-      // hand-tunes to 16 MiB at rust_1brc/src/main.rs:21); sweep it on the
-      // warm text path to locate the split-size plateau
-      for (mb <- Seq(16, 64, 128, 256)) {
-        spark.conf.set("spark.sql.files.maxPartitionBytes", s"${mb}MB")
-        val (_, t) = timed {
-          OneBrc.brcAgg(OneBrc.readMeasurementsFast(spark, s"$dir/csv")).collect()
-        }
-        report(s"brc_text_split_${mb}mb", t)
-      }
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "128MB")
     }
     spark.stop()
   }

@@ -40,47 +40,11 @@ object OneBrc {
       .option("sep", ";").option("header", "false").option("mode", mode)
       .csv(path)
 
-  /** Throughput-path scan: text datasource + substring split. Skips the
-    * general CSV parser's quote/escape machinery (which the 1BRC format
-    * never needs — station names cannot contain ';' or newline, FIXTURES.md
-    * §1) for ~2.2x scan throughput at 1e9 rows. Trade-off vs
-    * readMeasurements: malformed measures become null instead of erroring —
-    * use the CSV reader when FAILFAST semantics matter. */
-  def readMeasurementsFast(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path).select(
-      substring_index(col("value"), ";", 1).as("station"),
-      substring_index(col("value"), ";", -1).cast("double").as("measure"))
-
-  /** Fastest text scan: single-pass codegen parser expression
-    * (graft.functions.BrcParseLine — one byte scan per line, fixed-point
-    * digit parse, the reference's tokenizer as a Catalyst expression).
-    * Malformed lines yield nulls (drop them downstream if needed). */
-  def readMeasurementsTurbo(spark: SparkSession, path: String): DataFrame = {
-    graft.functions.BrcParseLine.register(spark)
-    spark.read.text(path)
-      .select(expr("brc_parse(value)").as("m"))
-      .select(col("m.station").as("station"), col("m.measure").as("measure"))
-  }
-
-  /** Fastest text scan, round 2: the struct expression above still builds a
-    * GenericInternalRow + boxed Double per line; splitting the parse into
-    * two primitive expressions removes every per-line allocation except the
-    * station key slice itself — brc_tenths returns a primitive long read
-    * straight off the UTF8String bytes (no full-line getBytes copy), and
-    * the downstream aggregation stays in integer tenths (R4/R5 semantics,
-    * thebracket.rs:73-110). Output of brcAggTenths is bit-identical to
-    * brcAgg over the double path on 1-dp data (FormatParitySpec). */
-  def readMeasurementsTenths(spark: SparkSession, path: String): DataFrame = {
-    graft.functions.BrcSplitParse.register(spark)
-    spark.read.text(path).select(
-      expr("brc_station(value)").as("station"),
-      expr("brc_tenths(value)").as("t"))
-  }
-
-  /** DataSource V2 scan (graft.sources.BrcDataSource): line splitting and
-    * parsing fused into one buffer pass inside the connector — no Hadoop
-    * Text, no per-line UTF8String, rows reused. Same (station, t) shape as
-    * readMeasurementsTenths; feed brcAggTenths. */
+  /** The 1BRC text scan: DataSource V2 (graft.sources.BrcDataSource), line
+    * splitting and parsing fused into one buffer pass inside the connector —
+    * no Hadoop Text, no per-line UTF8String, rows reused. Malformed lines
+    * are hard errors, like readMeasurements' FAILFAST. Emits (station,
+    * t tenths); feed brcAggTenths. */
   def readMeasurementsV2(spark: SparkSession, path: String,
       splitBytes: Long = 128L * 1024 * 1024): DataFrame =
     spark.read.format("graft.sources.BrcDataSource")
@@ -97,12 +61,16 @@ object OneBrc {
         (col("maxT").cast("double") / 10.0).as("max_measure"))
       .orderBy("station")
 
+  /** Per-station tenths partials (station, minT, maxT, sumT, cnt) over
+    * (station, t) — batch or streaming input. */
+  def tenthsPartials(df: DataFrame): DataFrame =
+    df.groupBy(col("station"))
+      .agg(min(col("t")).as("minT"), max(col("t")).as("maxT"),
+        sum(col("t")).as("sumT"), count(col("t")).as("cnt"))
+
   /** Pure-integer 1BRC aggregate over (station, t): min/max/sum/count on
     * longs, floating point only in the 413-row final projection. */
-  def brcAggTenths(df: DataFrame): DataFrame =
-    tenthsFinal(df.groupBy(col("station"))
-      .agg(min(col("t")).as("minT"), max(col("t")).as("maxT"),
-        sum(col("t")).as("sumT"), count(col("t")).as("cnt")))
+  def brcAggTenths(df: DataFrame): DataFrame = tenthsFinal(tenthsPartials(df))
 
   /** Core 1BRC aggregate over any (station, measure) projection.
     * mean is computed from an exact integer-cents sum so the result is

@@ -13,7 +13,10 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.BrcParse
 
 /** DataSource V2 for the 1BRC text format (`station;d?d.d` lines): the
   * reference's chunk-aligned byte scanner (rust_1brc/src/main.rs:174-198,
@@ -366,11 +369,11 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
       pos = math.min(nl + 1, limit)
       if (lineEnd > lineStart) {
         if (stationOrd >= 0 || tOrd >= 0) {
-          var sep = lineStart
-          while (sep < lineEnd && buf(sep) != ';') sep += 1
+          val sep = (BrcParse.sepIndex(buf, BYTE_ARRAY_OFFSET + lineStart,
+            BYTE_ARRAY_OFFSET + lineEnd) - BYTE_ARRAY_OFFSET).toInt
           if (tOrd >= 0) {
-            val t = if (sep < lineEnd)
-              graft.functions.BrcParse.parseTenthsRange(buf, sep + 1, lineEnd)
+            val t = if (sep < lineEnd) BrcParse.parseTenths(buf,
+              BYTE_ARRAY_OFFSET + sep + 1, BYTE_ARRAY_OFFSET + lineEnd)
             else Long.MinValue
             if (t == Long.MinValue)
               throw new IllegalArgumentException("malformed 1BRC line: " +

@@ -602,15 +602,13 @@ object Streaming {
       // (same oracle as q08/q19).
       graft.functions.BrcSplitParse.register(sp)
       val name = s"graft_sbrc_${System.nanoTime()}"
-      val q = sp.readStream
+      val lines = sp.readStream
         .schema(StructType(Seq(StructField("value", StringType))))
         .option("pathGlobFilter", "measurements_golden.csv")
         .text(graft.Fixtures.root)
         .select(expr("brc_station(value)").as("station"),
           expr("brc_tenths(value)").as("t"))
-        .groupBy(col("station"))
-        .agg(min(col("t")).as("minT"), max(col("t")).as("maxT"),
-          sum(col("t")).as("sumT"), count(col("t")).as("cnt"))
+      val q = graft.onebrc.OneBrc.tenthsPartials(lines)
         .writeStream.outputMode("complete")
         .format("memory").queryName(name)
         .start()

@@ -96,4 +96,22 @@ class DocConsistencySpec extends SparkSpec {
     assert(counts.forall(_._2 == 1),
       s"each must appear exactly once — decode through JpegCodec / PngFull: $counts")
   }
+
+  test("one 1BRC text reader and one tenths parse body in src/main") {
+    // the copies this guards against: a second parse loop beside
+    // BrcParse.parseTenths, and the slower text readers the brc
+    // connector replaced
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(f => java.nio.file.Files.readString(f))
+    assert(sources.nonEmpty, "src/main must be readable from the repo root")
+    def count(needle: String): Int = sources
+      .map(_.split(java.util.regex.Pattern.quote(needle), -1).length - 1).sum
+    assert(count("if (seenDot && frac == 0)") == 1,
+      "parse 1BRC measures through BrcParse.parseTenths")
+    val gone = Seq("readMeasurementsFast", "readMeasurementsTurbo",
+      "readMeasurementsTenths", "\"brc_parse\"").filter(count(_) > 0)
+    assert(gone.isEmpty, s"removed 1BRC text paths are back: $gone")
+  }
 }

@@ -37,42 +37,21 @@ class FormatParitySpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("fast text+split scan agrees with the CSV datasource scan") {
-    val golden = "/root/repo/fixtures/measurements_golden.csv"
-    assert(
-      OneBrc.brcAgg(OneBrc.readMeasurementsFast(spark, golden)).collect().toSeq ==
-        OneBrc.brcAgg(OneBrc.readMeasurements(spark, golden)).collect().toSeq)
-  }
-
-  test("turbo single-pass parser agrees with the CSV datasource scan") {
-    val golden = "/root/repo/fixtures/measurements_golden.csv"
-    assert(
-      OneBrc.brcAgg(OneBrc.readMeasurementsTurbo(spark, golden)).collect().toSeq ==
-        OneBrc.brcAgg(OneBrc.readMeasurements(spark, golden)).collect().toSeq)
-    // malformed lines -> null station/measure (not errors)
-    val bad = tempFile("brct", ".csv")
-    java.nio.file.Files.writeString(bad,
-      // trailing-dot and 4-integer-digit measures are outside the domain
-      // and must null out, not silently coerce; 103.4-style 3-digit values
-      // are REAL generator output (Normal tails exceed ±100) and must parse
-      "Oslo;1.5\nnonsense\nOslo;x.y\nOslo;-12.3\nOslo;12.\nOslo;1234.5\nOslo;.5\nOslo;103.4\n")
-    val parsed = OneBrc.readMeasurementsTurbo(spark, bad.toString).collect()
-    assert(parsed.count(r => !r.isNullAt(1)) == 3)
-    assert(parsed.exists(r => !r.isNullAt(1) && r.getDouble(1) == 103.4))
-    assert(parsed.exists(r => !r.isNullAt(1) && r.getDouble(1) == -12.3))
-  }
-
   test("split-expression tenths path agrees with the CSV datasource scan") {
+    // q94's shape: text lines parsed by brc_station/brc_tenths
+    graft.functions.BrcSplitParse.register(spark)
+    def readTenths(path: String) = spark.read.text(path).select(
+      expr("brc_station(value)").as("station"),
+      expr("brc_tenths(value)").as("t"))
     val golden = "/root/repo/fixtures/measurements_golden.csv"
     assert(
-      OneBrc.brcAggTenths(OneBrc.readMeasurementsTenths(spark, golden))
-        .collect().toSeq ==
+      OneBrc.brcAggTenths(readTenths(golden)).collect().toSeq ==
         OneBrc.brcAgg(OneBrc.readMeasurements(spark, golden)).collect().toSeq)
     // malformed measures -> null tenths; missing ';' -> null station too
     val bad = tempFile("brcs", ".csv")
     java.nio.file.Files.writeString(bad,
       "Oslo;1.5\nnonsense\nOslo;x.y\nOslo;-12.3\nOslo;12.\nOslo;1234.5\nOslo;103.4\n")
-    val parsed = OneBrc.readMeasurementsTenths(spark, bad.toString).collect()
+    val parsed = readTenths(bad.toString).collect()
     assert(parsed.count(r => !r.isNullAt(1)) == 3)
     assert(parsed.count(r => r.isNullAt(0)) == 1, "only the ';'-less line")
     assert(parsed.exists(r => !r.isNullAt(1) && r.getLong(1) == -123L))

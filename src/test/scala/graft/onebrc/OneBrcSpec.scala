@@ -72,17 +72,39 @@ class OneBrcSpec extends SparkSpec {
   }
 
   test("parseTenths: exhaustive over the full documented domain") {
+    import graft.functions.BrcParse
+    import org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
     import org.apache.spark.unsafe.types.UTF8String
-    // the UTF8String hot-path parser and the byte-array parser (expression
-    // + DataSource V2 paths) are parallel bodies — lock them together here
-    def p(s: String): Long = {
-      val u = graft.functions.BrcParse.tenthsOfU(UTF8String.fromString(s))
-      val bytes = s.getBytes("UTF-8")
-      val sep = graft.functions.BrcParse.sepIndex(bytes)
-      val r = if (sep < 0) Long.MinValue
-        else graft.functions.BrcParse.parseTenths(bytes, sep + 1)
-      assert(u == r, s"UTF8String and byte-array parsers must agree on '$s'")
-      u
+    // independent reference: the domain as a regex, the value as decimal
+    // arithmetic; Long.MinValue marks a malformed line
+    val domain = """-?\d{1,3}(\.\d)?""".r
+    def expected(line: String): Long = line.indexOf(';') match {
+      case -1 => Long.MinValue
+      case i => line.substring(i + 1) match {
+        case m @ domain(_*) => (BigDecimal(m) * 10).toLongExact
+        case _ => Long.MinValue
+      }
+    }
+    // the one parse body, reached the three ways its callers reach it:
+    // a whole UTF8String, a UTF8String slice of a larger array, and a
+    // byte[] window as the DataSource V2 reader passes its buffer; the
+    // bytes around each window would change the answer if read
+    def tenthsOf(line: String): Seq[Long] = {
+      val bytes = line.getBytes("UTF-8")
+      val arr = "9;".getBytes("UTF-8") ++ bytes ++ "7;".getBytes("UTF-8")
+      val slice = UTF8String.fromBytes(arr, 2, bytes.length)
+      assert(slice.toString == line)
+      val from = BYTE_ARRAY_OFFSET + 2L; val until = from + bytes.length
+      val sep = BrcParse.sepIndex(arr, from, until)
+      val window = if (sep == until) Long.MinValue
+        else BrcParse.parseTenths(arr, sep + 1, until)
+      Seq(BrcParse.tenthsOfU(UTF8String.fromString(line)),
+        BrcParse.tenthsOfU(slice), window)
+    }
+    def check(line: String): Long = {
+      val want = expected(line)
+      assert(tenthsOf(line) == Seq(want, want, want), s"line '$line'")
+      want
     }
     // every representable measure -999.9 .. 999.9 round-trips exactly
     // (the generator's Normal tails exceed ±100 at 1e9 rows, so the domain
@@ -90,15 +112,16 @@ class OneBrcSpec extends SparkSpec {
     for (t <- -9999L to 9999L) {
       val sign = if (t < 0) "-" else ""
       val a = math.abs(t)
-      assert(p(s"X;$sign${a / 10}.${a % 10}") == t, s"tenths $t")
+      assert(check(s"X;$sign${a / 10}.${a % 10}") == t, s"tenths $t")
     }
     // integer form scales to tenths
     for (v <- -999L to 999L)
-      assert(p(s"X;$v") == v * 10, s"int $v")
+      assert(check(s"X;$v") == v * 10, s"int $v")
     // everything outside the domain nulls out (Long.MinValue sentinel)
     for (bad <- Seq("X;12.", "X;1234.5", "X;.5", "X;1..2", "X;1.23",
-        "X;-", "X;", "X;a.b", "X;1a.2", "noseparator", "X;--1.0"))
-      assert(p(bad) == Long.MinValue, s"malformed '$bad'")
+        "X;-", "X;", "X;a.b", "X;1a.2", "noseparator", "X;--1.0",
+        "X;+1.0", "X; 1.0", "X;1.0 ", "X;1.2;3", "X;0005", "X;1.25", ""))
+      assert(check(bad) == Long.MinValue, s"malformed '$bad'")
   }
 
   test("entry() smoke: flagship query returns rows on sf0.001") {
