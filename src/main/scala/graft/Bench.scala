@@ -91,16 +91,18 @@ object Bench {
     * (item 2): this box swings ±20-50% run to run, so 39 untouched
     * queries "regressed" at geomean 0.862 and the round's real wins were
     * unreadable without judge-side reconstruction. These five are
-    * trivial, PlanSpec-pinned, and untouched since their build rounds —
-    * their seconds move only with the box. Every bench artifact now
+    * trivial, PlanSpec-pinned, reach no memo, stage or CacheRegistry
+    * site, and are untouched since their build rounds — their seconds move
+    * only with the box (q20 replaced q69, whose CC memo was rewritten
+    * twice after r13). Every bench artifact now
     * carries their current readings plus `ratio` = (sum now) / (sum at
     * the r13 driver reference), so a suite-over-suite comparison can be
     * normalized in-artifact: per-query movement that tracks `ratio` is
     * environment, not plan. Additions-only: timing protocol, reps, sink
     * and the queries map are untouched. */
   val controlQueries: Seq[(String, Double)] = Seq(
-    "q01_onebrc_events" -> 0.611, "q51_date_funcs" -> 0.277,
-    "q69_dedup_clusters" -> 0.033, "q206_video_ingest" -> 0.103,
+    "q01_onebrc_events" -> 0.611, "q20_tpch_q1" -> 0.323,
+    "q51_date_funcs" -> 0.277, "q206_video_ingest" -> 0.103,
     "q306_utf8_repair" -> 0.076)
 
   /** Guard ceiling for the printed stdout line (see main). */

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Shared parquet staging: a configurable root, a canonical-path-keyed
   * directory per (namespace, corpus), and a single-flight write-once memo.
   * This is the q105 staging discipline (one eager materialization serves
@@ -11,6 +13,17 @@ package graft
   * ORC, JSONL, XML, partitioned and bucketed source stages
   * (q121/q117/q138/q130/q132), the brc sink stage and every streaming
   * stage, q142's state checkpoint included.
+  *
+  * [[frame]] is the memo of finished frames built on it: a frame is
+  * written once per (namespace, corpus) and every consumer scans the
+  * parquet leaf instead of re-analyzing the lineage that built it. Its
+  * namespaces are the trained ANN models `ann-pq-codebook` (q327),
+  * `ann-lloyd` (q129/q143/q150) and `ann-lloyd-inc` (q151), the ranked
+  * lists `ki-ranked` (q218/q258) and `bm25-ranked` (q153/q165/q255), the
+  * verified dedup pairs `dedup-delta-pairs` (q78/q99/q104) and the CC
+  * labels `cc` (q69/q77/q102/q120/q304), plus the q155 `rollup`. Like every
+  * stage, memo frames are durable under `-Dgraft.stage.dir` and are
+  * dropped with their corpus by [[forgetCorpus]].
   *
   * Durability: by default the root is a temp dir deleted on JVM exit
   * (tests, one-shot jobs). Setting `-Dgraft.stage.dir=<path>` points the
@@ -111,6 +124,18 @@ object Staging {
         written(key) = true
       }
     }
+
+  /** The frame `build` computes, staged once per (`ns`, corpus `d`) as
+    * parquet under [[dirFor]] and returned as a scan of that stage:
+    * single-flight and durable like any [[once]] stage, and forgotten with
+    * the corpus by [[forgetCorpus]]. Consumers compose on a leaf, so the
+    * lineage that built the frame is neither re-analyzed nor re-run. */
+  def frame(s: SparkSession, ns: String, d: String)
+           (build: => DataFrame): DataFrame = {
+    val dir = dirFor(ns, d)
+    once(dir) { build.write.mode("overwrite").parquet(dir) }
+    s.read.parquet(dir)
+  }
 
   /** [[once]] for a step that APPENDS into directories that already hold
     * committed files (delta admission: ANN codes, lexical postings).

@@ -42,8 +42,7 @@ object ArchiveBytes {
     * allocated. */
   private val MaxInflated = 64 * 1024 * 1024
 
-  private final class Malformed extends Exception(null, null, false, false)
-  private def fail(): Nothing = throw new Malformed
+  import Malformed.fail
 
   private[functions] def md5hex(b: Array[Byte], off: Int, len: Int): UTF8String = {
     val d = java.security.MessageDigest.getInstance("MD5")

@@ -44,8 +44,7 @@ import org.apache.spark.sql.types._
   */
 object GifInfo {
 
-  private final class Malformed extends Exception(null, null, false, false)
-  private def fail(): Nothing = throw new Malformed
+  import Malformed.fail
 
   /** struct(width, height, gif89a, gct_size, gct_crc32, bg_index,
     * n_images, n_extensions, n_gce, n_lct, n_interlaced, data_bytes,
@@ -125,8 +124,7 @@ object GifInfo {
 
 object GifPixels {
 
-  private final class Malformed extends Exception(null, null, false, false)
-  private def fail(): Nothing = throw new Malformed
+  import Malformed.fail
 
   private val MaxPixels = 4L * 1024 * 1024
 

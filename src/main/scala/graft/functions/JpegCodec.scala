@@ -67,6 +67,7 @@ import org.apache.spark.sql.types._
   * land the same px_crc32 (JpegProgSpec, JpegProgColorSpec).
   */
 object JpegCodec {
+  import Malformed.fail
 
   /** round(1024·c(u)·cos((2x+1)uπ/16)), c(0)=1/√2. `private[graft]` so
     * JpegScale's expected-side pixel math provably uses the SAME matrix
@@ -102,10 +103,6 @@ object JpegCodec {
       "px_sqsum", "px_crc32").map(StructField(_, LongType, nullable = false)))
   val GraySchema: StructType = pixelSchema("n_blocks")
   val RgbSchema: StructType = pixelSchema("n_mcus")
-
-  private[functions] final class Malformed
-      extends Exception(null, null, false, false)
-  private[functions] def fail(): Nothing = throw new Malformed
 
   /** Marker-segment cursor over a file that starts with SOI: `i` sits on
     * the next marker; every read is bounds-checked (past-EOF = malformed). */

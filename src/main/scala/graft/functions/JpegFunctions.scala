@@ -43,7 +43,7 @@ import org.apache.spark.sql.types._
   */
 object JpegInfo {
 
-  import JpegCodec.{Malformed, fail}
+  import Malformed.fail
 
   /** struct(width, height, precision, n_components, progressive,
     * n_segments, n_dqt, dqt_crc32, n_dht, dht_crc32, jfif, exif,
@@ -185,7 +185,7 @@ object JpegInfo {
   * (manifest_exif.csv), both byte orders committed. */
 object JpegExif {
 
-  import JpegCodec.{Malformed, fail}
+  import Malformed.fail
 
   def decode(b: Array[Byte]): InternalRow = {
     val mk = JpegCodec.markers(b)

@@ -39,6 +39,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * of counts/digest per document cross the shuffle, never the PDF.
   */
 object PdfText {
+  import Malformed.fail
 
   /** Inflated-content allocation cap: a content stream claiming to
     * inflate past this is treated as malformed, not allocated. */
@@ -62,11 +63,6 @@ object PdfText {
     }
     true
   }
-
-  /** Thrown internally for any malformed byte; caught once in
-    * [[extract]] and turned into the null result. */
-  private final class Malformed extends Exception(null, null, false, false)
-  private def fail(): Nothing = throw new Malformed
 
   /** Parse one literal string starting at `(`; returns next index,
     * appends decoded chars to `out` (PDF §7.3.4.2 — keep in sync with

@@ -371,15 +371,15 @@ object Dedup {
     * verified delta-touching pass into cross (q78) and delta-internal
     * (q104) AFTER verification is result-identical to the per-gate
     * candidate filters: verification is per-pair, and each gate's
-    * candidate set is a subset of this pass's. Memoized lineage-truncated
-    * through [[graft.SessionMemo]]; [[invalidateClusters]] drops the
-    * entry with the corpus. Corpus-internal pairs still cost nothing —
+    * candidate set is a subset of this pass's. Staged once per corpus
+    * through [[graft.Staging.frame]]; [[invalidateClusters]] drops the
+    * stage with the corpus. Corpus-internal pairs still cost nothing —
     * the candidate filter runs BEFORE verification, unchanged. */
   private[operators] def deltaTouchingPairs(s: SparkSession,
       d: String): DataFrame = {
     val iDelta = (col("i") % DeltaMod) === DeltaRem
     val jDelta = (col("j") % DeltaMod) === DeltaRem
-    graft.SessionMemo.once(s, "dedup-delta-pairs", d) {
+    graft.Staging.frame(s, "dedup-delta-pairs", d) {
       minhashLshRestricted(shingles(s, d), Some(iDelta || jDelta))
     }
   }
@@ -486,15 +486,15 @@ object Dedup {
     * join + one partial-agg groupBy). Labels only decrease, so the sum of
     * labels is a strictly-decreasing convergence witness — one cheap
     * scalar action per round, no self-join diffing. */
-  /** The CC labels are memoized per (session, corpus) through
-    * [[graft.SessionMemo]]: unlike the declarative shingle/signature
+  /** The CC labels are staged once per corpus through
+    * [[graft.Staging.frame]]: unlike the declarative shingle/signature
     * frames (shared through the cache manager by plan identity), the
     * fixpoint loop runs driver-side actions, so each caller would
-    * re-execute it. One computation serves q69 + q77 — the in-session
-    * analog of staging the labels table once per corpus, which is exactly
-    * what a 100 TB pipeline would persist between stages. */
+    * re-execute it. One computation serves q69, q77 and the keeper
+    * queries — the labels table a 100 TB pipeline persists between
+    * stages. */
   def nearDupClusters(s: SparkSession, d: String): DataFrame =
-    graft.SessionMemo.once(s, "cc", d) {
+    graft.Staging.frame(s, "cc", d) {
       clustersFromPairs(
         minhashLshFrom(shingles(s, d)).select(col("i"), col("j")))
     }
@@ -502,16 +502,15 @@ object Dedup {
   /** Invalidate everything the library has staged or memoized for
     * corpus `d` — required after rewriting the corpus under `d`
     * in-session, and the release hook a long-lived driver calls when done
-    * with a corpus. Drops every session-memoized frame of the corpus (CC
-    * labels, trained models), forgets EVERY parquet stage of the corpus
-    * whatever its namespace (see [[graft.Staging.forgetCorpus]]), drops
+    * with a corpus. Forgets EVERY parquet stage of the corpus whatever its
+    * namespace (see [[graft.Staging.forgetCorpus]]), the memo frames (CC
+    * labels, trained models, ranked lists, verified pairs) included, drops
     * the streaming schema probe, UNPERSISTS every frame the library
     * registered for the session (see [[graft.CacheRegistry]] — without
     * this the cache accumulates one entry per corpus per query family for
     * the session's lifetime), and refreshes the path-derived cache
     * entries. */
   def invalidateClusters(s: SparkSession, d: String): Unit = {
-    graft.SessionMemo.forgetDir(d)
     graft.Staging.forgetCorpus(d)
     graft.streaming.Streaming.forgetTsField(d)
     graft.CacheRegistry.release(s)
@@ -611,8 +610,8 @@ object Dedup {
       // in the caller's session: a frame left on the clone would silently
       // plan every downstream op (as the left operand) with the loop's
       // edge-sized shuffle parallelism. Not checkpointed here: the one
-      // memoizing caller (nearDupClusters → SessionMemo.once)
-      // materializes it exactly once.
+      // staging caller (nearDupClusters → Staging.frame) materializes it
+      // exactly once.
       val out = labels.select(col("v").as("doc_id"), col("lbl").as("keeper"))
         .orderBy("doc_id")
       base.createDataFrame(out.rdd, out.schema)
@@ -1117,7 +1116,9 @@ object Dedup {
       editDistPairs(corpus).orderBy("a", "b")
     }),
 
-    "q69_dedup_clusters" -> ((s, d) => nearDupClusters(s, d)),
+    "q69_dedup_clusters" -> ((s, d) =>
+      // the staged labels scan back in file order, not doc_id order
+      nearDupClusters(s, d).orderBy("doc_id")),
 
     "q304_quality_keeper" -> ((s, d) => {
       // Quality-aware dedup KEEPER selection — production near-dup

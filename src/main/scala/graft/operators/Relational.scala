@@ -4023,13 +4023,11 @@ object Relational {
         .groupBy(col("day"), col("event_type"))
         .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("total_cents"),
           min(col("cents")).as("min_cents"), max(col("cents")).as("max_cents"))
-      val dir = graft.Staging.dirFor("rollup", d)
-      graft.Staging.once(dir) {
+      val rollup = graft.Staging.frame(s, "rollup", d) {
         partial(events(s, d).filter(col("ts") < cut))
-          .write.mode("overwrite").parquet(dir)
       }
       partial(events(s, d).filter(col("ts") >= cut))
-        .unionByName(s.read.parquet(dir))
+        .unionByName(rollup)
         .groupBy(col("day"), col("event_type"))
         .agg(sum(col("n_events")).as("n_events"),
           sum(col("total_cents")).as("total_cents"),

@@ -209,22 +209,6 @@ object Similarity {
   val LloydK = 8
   val LloydIters = 3
 
-  /** Session-memoized, lineage-truncated TRAINED model frames (r14, the
-    * r13 verdict's "single-flight the training frames"). Training loops
-    * (Lloyd, PQ) build plans whose size grows per iteration, and every
-    * consumer query RE-BUILT that whole tree: the CacheRegistry entries
-    * dedupe the *execution*, but Catalyst re-ANALYZES the full training
-    * lineage on every DataFrame construction — measured 1.3 s of q143's
-    * 2.5 s run (vs 1.2 s executing), every bench rep, caches hot.
-    * [[graft.SessionMemo]] truncates the finished model to a leaf and
-    * hands every consumer in the session the SAME frame — training
-    * literally runs once per (session, corpus). Values are unchanged.
-    * [[forgetAnnStages]] drops a corpus's entries on rewrite, exactly
-    * like the parquet stages. */
-  private def trainedOnce(s: SparkSession, d: String, key: String)
-      (build: => DataFrame): DataFrame =
-    graft.SessionMemo.once(s, s"ann-$key", d)(build)
-
   /** PQ codebook training constants (q327): M=4 subspaces × K=16 entries,
     * trained with q129's integer-exact Lloyd arithmetic PER SUBSPACE,
     * initialized from the first-16-vectors stand-in — so the trained
@@ -239,9 +223,13 @@ object Similarity {
     * subvectors (q129's arithmetic-parity rules verbatim: exact integer
     * distances, trunc division, empty-cell carry). Driver loop builds
     * plan only; each round's frame is registry-cached because the next
-    * iteration references it twice (distance join + empty-cell carry). */
+    * iteration references it twice (distance join + empty-cell carry).
+    * Staged once per corpus ([[graft.Staging.frame]], like every trained
+    * model frame here): training loops grow the plan per iteration, and a
+    * consumer re-analyzing that lineage on every construction cost 1.3 s
+    * of q143's 2.5 s run at sf0.1, caches hot. */
   private def pqTrainedCodebook(s: SparkSession, d: String): DataFrame =
-      trainedOnce(s, d, "pq-codebook") {
+      graft.Staging.frame(s, "ann-pq-codebook", d) {
     val M = 4; val SubDim = Dim / M
     val exm = t(s, d, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "x")))
@@ -357,7 +345,7 @@ object Similarity {
     * Lloyd steps (see q129's scaladoc for the arithmetic-parity rules).
     * Driver loop builds plan only — no action inside. */
   private def lloydCentroids(s: SparkSession, d: String): DataFrame =
-    trainedOnce(s, d, "lloyd") {
+    graft.Staging.frame(s, "ann-lloyd", d) {
       lloydCentroidsOn(s, d, None, col("vec_id") < LloydK)
     }
 
@@ -508,23 +496,9 @@ object Similarity {
   val AnnIncSeedBound = 10
   val AnnIncCbBound = 20
 
-  /** Corpus-rewrite hook for every ANN stage of `d` (q150's composed
-    * index and q151's incremental build+admission) —
-    * Dedup.invalidateClusters routes here. Dropping the base key makes
-    * the next q151 rebuild OVERWRITE the stage dir (clearing appended
-    * delta files with it), so a forgotten index can never double-admit. */
-  def forgetAnnStages(d: String): Unit = {
-    graft.Staging.forget(annStageDir(d))
-    graft.Staging.forget(s"${annIncStageDir(d)}/codes@base")
-    graft.Staging.forget(s"${annIncStageDir(d)}/codes@delta")
-    // the memoized trained frames describe the corpus too (r14) — a
-    // rewritten corpus must retrain, not serve stale checkpointed models
-    graft.SessionMemo.forgetDir(d)
-  }
-
   /** q151's base-trained centroid frame (Lloyd over base vectors only). */
   private def annIncCentroids(s: SparkSession, d: String): DataFrame =
-    trainedOnce(s, d, "lloyd-inc") {
+    graft.Staging.frame(s, "ann-lloyd-inc", d) {
       lloydCentroidsOn(s, d, Some(isBaseVec),
         col("vec_id") < AnnIncSeedBound)
     }
@@ -1197,8 +1171,8 @@ object Similarity {
       // one broadcast-kNN corpus pass). A missing rank contributes 0 —
       // the standard RRF treatment of a doc absent from one list.
       VectorExpressions.register(s)
-      // r14: the lexical leg is the session-memoized served list (one
-      // scoring pass for q153/q165/q255 — SessionMemo at bm25RankedServed)
+      // the lexical leg is the staged served list (one scoring pass for
+      // q153/q165/q255 — the bm25-ranked frame at bm25RankedServed)
       val lex = TextAnalysis.bm25RankedServed(s, d)
         .select(col("query_id"), col("doc_id"), col("rk").as("lex_rk"))
       val e = t(s, d, "embeddings")

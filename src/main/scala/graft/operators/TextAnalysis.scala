@@ -98,7 +98,7 @@ object TextAnalysis {
   }
 
   /** The q218 metric tail over a prebuilt ranked frame — factored (r14)
-    * so the corpus query serves the SessionMemo'd ranked lists while
+    * so the corpus query serves the staged ranked lists while
     * RetrievalEvalSpec keeps feeding engineered corpora through
     * [[knownItemEvalOn]]. */
   private def knownItemEvalFrom(queries: DataFrame,
@@ -113,15 +113,15 @@ object TextAnalysis {
         col("tr").isNotNull.as("hit10"))
   }
 
-  /** The known-item ranked lists for the CORPUS documents, memoized +
-    * lineage-truncated per (session, corpus) — ONE scoring pass serves
+  /** The known-item ranked lists for the CORPUS documents, staged once
+    * per corpus ([[graft.Staging.frame]]) — ONE scoring pass serves
     * q218's rank eval and q258's NDCG (r14; they previously each
     * executed the identical bm25ServeOn pipeline and re-analyzed its
     * full lineage per construction). At 100 TB the ranked lists are
     * eval-sized (10 rows/query) — exactly the intermediate a production
     * eval stage materializes. */
   private def knownItemRankedServed(s: SparkSession, d: String): DataFrame =
-    graft.SessionMemo.once(s, "ki-ranked", d) {
+    graft.Staging.frame(s, "ki-ranked", d) {
       val (tf, dl, queries) = knownItemFrames(t(s, d, "documents"))
       bm25ServeOn(s, tf, dl, queries)
     }
@@ -322,15 +322,15 @@ object TextAnalysis {
     bm25Serve(s, tf, dl)
   }
 
-  /** [[bm25Ranked]] memoized + lineage-truncated per (session, corpus)
-    * (r14): ONE scoring pass serves q153's output, q165's lexical leg
+  /** [[bm25Ranked]] staged once per corpus ([[graft.Staging.frame]],
+    * r14): ONE scoring pass serves q153's output, q165's lexical leg
     * and q255's RBO leg — the three consumers previously each executed
     * (and re-analyzed) the identical pipeline. The frame is 10 rows per
     * query; sharing the served LIST (not a re-derivation) also makes the
     * "agreement can never drift from the fusion" contract literal. */
   private[operators] def bm25RankedServed(s: SparkSession,
       d: String): DataFrame =
-    graft.SessionMemo.once(s, "bm25-ranked", d)(bm25Ranked(s, d))
+    graft.Staging.frame(s, "bm25-ranked", d)(bm25Ranked(s, d))
 
   // ---- q168/q169: the inverted index as a STAGED artifact --------------
 
@@ -359,16 +359,6 @@ object TextAnalysis {
   val LexDeltaRem = 4
   def isBaseDoc: org.apache.spark.sql.Column =
     (col("doc_id") % LexDeltaMod) =!= LexDeltaRem
-
-  /** Corpus-rewrite hook for the lexical index stages of `d` —
-    * Dedup.invalidateClusters routes here. Dropping the base key makes
-    * the next q169 rebuild OVERWRITE the stage (clearing appended delta
-    * files), so a forgotten index can never double-admit. */
-  def forgetLexStages(d: String): Unit = {
-    graft.Staging.forget(s"${lexStageDir(d)}@full")
-    graft.Staging.forget(s"${lexIncStageDir(d)}@base")
-    graft.Staging.forget(s"${lexIncStageDir(d)}@delta")
-  }
 
   /** Write postings (bucket-partitioned) + doclen for the docs `pred`
     * selects into `dir` with the given save mode — the shared body of
@@ -2571,7 +2561,7 @@ object TextAnalysis {
       // rank 1). At 100 TB the query set is eval-sized (broadcast), so
       // the cost is one posting-list-bounded scoring pass — the eval
       // rides the production serving plan (r14: the ranked lists are
-      // the SessionMemo'd pass shared with q258).
+      // the staged pass shared with q258).
       {
         val (_, _, queries) = knownItemFrames(t(s, d, "documents"))
         knownItemEvalFrom(queries, knownItemRankedServed(s, d))
@@ -2596,7 +2586,7 @@ object TextAnalysis {
       // throughout. At 100 TB the shape is q218's: broadcast
       // eval-sized query set, posting-bounded scoring pass, one extra
       // map-side-combined rel aggregate; nothing new shuffles.
-      // (r14: ranked lists = the SessionMemo'd pass shared with q218)
+      // (r14: ranked lists = the staged pass shared with q218)
       {
         val (tf, _, queries) = knownItemFrames(t(s, d, "documents"))
         ndcgEvalFrom(tf, queries, knownItemRankedServed(s, d))

@@ -796,11 +796,11 @@ object Streaming {
       // at scale it is the broadcast-able reject list, not corpus state
       // in the stream's checkpoint.
       val name = s"graft_sadmit_${System.nanoTime()}"
-      // rejects stay keyed to the CALLER's long-lived session (the memo
-      // would never hit under the per-invocation clone); joining the
-      // clone-rooted stream to a base-session static frame is fine — the
-      // merged plan executes under the stream's session, and the shared
-      // CacheManager serves the memoized labels either way
+      // rejects are built on the CALLER's long-lived session, not the
+      // per-invocation clone; joining the clone-rooted stream to a
+      // base-session static frame is fine — the merged plan executes
+      // under the stream's session, and the verified pairs are a stage
+      // keyed by corpus alone, so either session scans the same files
       val rejects = graft.operators.Dedup.deltaRejects(s, d)
       val q = sp.readStream.schema(docsSchema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)

@@ -6,8 +6,9 @@ package graft
   * spec fails the build whenever N != SparkEntry.queries.size — the only
   * way to add a query is to bump the README in the same change. It also
   * reads src/main so the session builder and the stage root each keep
-  * exactly one home (GraftSession, Staging), and the JPEG and PNG codecs
-  * each keep one core. */
+  * exactly one home (GraftSession, Staging), memoized frames stay Staging
+  * stages, the JPEG and PNG codecs each keep one core, and the binary
+  * decoders share one Malformed. */
 class DocConsistencySpec extends SparkSpec {
 
   test("README SUITE_COUNT matches SparkEntry.queries.size") {
@@ -78,9 +79,9 @@ class DocConsistencySpec extends SparkSpec {
   }
 
   test("one JPEG codec core and one PNG decoder in src/main") {
-    // the copies this guards against: a private Malformed class and an
-    // IDCT per JPEG pixel decoder, and a second chunk-walk/inflate path
-    // beside PngFull's
+    // the copies this guards against: a private Malformed class per binary
+    // decoder, an IDCT per JPEG pixel decoder, and a second
+    // chunk-walk/inflate path beside PngFull's
     val dir = java.nio.file.Paths.get("src/main/scala/graft/functions")
     def count(prefix: String, needle: String): Int =
       java.nio.file.Files.list(dir).toArray
@@ -90,11 +91,27 @@ class DocConsistencySpec extends SparkSpec {
           .split(java.util.regex.Pattern.quote(needle), -1).length - 1)
         .sum
     val counts = Seq(
-      "Jpeg" -> "class Malformed", "Jpeg" -> "(1L << 21)",
+      "" -> "class Malformed", "Jpeg" -> "(1L << 21)",
       "Png" -> "new java.util.zip.Inflater")
       .map { case (prefix, needle) => s"$prefix*: $needle" -> count(prefix, needle) }
     assert(counts.forall(_._2 == 1),
-      s"each must appear exactly once — decode through JpegCodec / PngFull: $counts")
+      s"each must appear exactly once — decode through JpegCodec / PngFull, " +
+        s"fail through Malformed: $counts")
+  }
+
+  test("one memo of finished frames in src/main: Staging.frame") {
+    // the second keyed memo beside Staging.once and its own corpus-forget
+    // hooks: every memoized frame is a Staging stage, and
+    // Staging.forgetCorpus is the one invalidation path
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(f => java.nio.file.Files.readString(f))
+    assert(sources.nonEmpty, "src/main must be readable from the repo root")
+    val gone = Seq("SessionMemo", "forgetDir(", "forgetAnnStages",
+      "forgetLexStages").filter(n => sources.exists(_.contains(n)))
+    assert(gone.isEmpty, s"memoize through Staging.frame, forget through " +
+      s"Staging.forgetCorpus: $gone")
   }
 
   test("one 1BRC text reader and one tenths parse body in src/main") {

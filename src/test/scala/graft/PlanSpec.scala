@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+
 /** Plan-shape assertions: the properties that make these queries scale are
   * not "it returned the right rows" but "Catalyst produced the plan that
   * still works at 1000 executors" — broadcast where intended, filters and
@@ -287,13 +289,22 @@ class PlanSpec extends SparkSpec {
     // side never shuffles toward them
     assert("BroadcastExchange".r.findAllIn(p).length >= 1,
       s"the dense leg should broadcast its query side:\n$p")
-    // r14: the lexical leg is the session-memoized served list (ONE
-    // BM25 scoring pass for q153/q165/q255 — bm25RankedServed), so it
-    // must enter the fusion as a lineage-truncated leaf, not as a
-    // re-derivation of the whole scoring pipeline (whose own broadcast
-    // shape is pinned via q153's oracle + the r13 plan dumps)
-    assert(p.contains("Scan ExistingRDD"),
-      s"the lexical leg should be the served (memoized) ranked list:\n$p")
+    // the lexical leg is the staged served list (ONE BM25 scoring pass
+    // for q153/q165/q255 — bm25RankedServed), so it must enter the
+    // fusion as a scan of the bm25-ranked stage, not as a re-derivation
+    // of the whole scoring pipeline from documents.parquet (whose own
+    // broadcast shape is pinned via q153's oracle + the r13 plan dumps)
+    val scanned = SparkEntry.queries("q165_rrf_fusion")(spark, sf0001)
+      .queryExecution.analyzed
+      .collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location.rootPaths }.flatten
+      .map(r => java.nio.file.Paths.get(r.toUri).normalize.toString)
+    val stage = java.nio.file.Paths.get(Staging.dirFor("bm25-ranked", sf0001))
+      .toAbsolutePath.normalize.toString
+    assert(scanned.contains(stage),
+      s"the lexical leg should scan the bm25-ranked stage $stage: $scanned")
+    assert(!scanned.exists(_.endsWith("documents.parquet")),
+      s"the lexical leg must not re-derive the ranked lists: $scanned")
   }
 
   test("q170: late interaction — query tokens broadcast, aggregations partial-before-exchange") {

@@ -23,7 +23,7 @@ class AnnDeltaSpec extends SparkSpec {
 
   test("q151: delta admission appends into cell= dirs, base files untouched") {
     VectorExpressions.register(spark)
-    Similarity.forgetAnnStages(sf0001)
+    graft.Staging.forgetCorpus(sf0001)
     val codesDir = new java.io.File(Similarity.annIncStageDir(sf0001) + "/codes")
 
     Similarity.annIncBuild(spark, sf0001)
@@ -91,7 +91,7 @@ class AnnDeltaSpec extends SparkSpec {
 
     val codesDir = new java.io.File(Similarity.annIncStageDir(sf0001) + "/codes")
     val staged = spark.read.parquet(codesDir.getAbsolutePath).count()
-    Similarity.forgetAnnStages(sf0001)
+    graft.Staging.forgetCorpus(sf0001)
     val second = graft.SparkEntry.queries("q151_ann_delta")(spark, sf0001)
       .collect().toSeq
     assert(second == first, "rebuild must reproduce the served answer")

@@ -41,7 +41,7 @@ class LexIndexSpec extends SparkSpec {
   }
 
   test("q169: delta admission appends into bucket dirs without touching a base file") {
-    TextAnalysis.forgetLexStages(sf0001)
+    graft.Staging.forgetCorpus(sf0001)
     TextAnalysis.lexIncBuild(spark, sf0001)
     val postDir = new java.io.File(TextAnalysis.lexIncStageDir(sf0001) + "/postings")
     def files(): Map[String, Long] = {
@@ -71,7 +71,7 @@ class LexIndexSpec extends SparkSpec {
     // rebuild after invalidation never double-admits
     spark.catalog.refreshByPath(postDir.getAbsolutePath)
     val staged = spark.read.parquet(postDir.getAbsolutePath).count()
-    TextAnalysis.forgetLexStages(sf0001)
+    graft.Staging.forgetCorpus(sf0001)
     val second = graft.SparkEntry.queries("q169_lex_delta")(spark, sf0001)
       .collect().toSeq
     assert(second == got, "rebuild must reproduce the served answer")
