@@ -8,55 +8,57 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * never drops them, so a long-lived driver would otherwise accumulate one
   * MEMORY_AND_DISK entry per corpus per query family for the life of the
   * session (the round-4 Dedup leak, and round 5's Graph.scala repeat).
-  * Every module that persists ([[graft.operators.Dedup]],
-  * [[graft.operators.Graph]]) routes through [[cached]]; [[release]] is
+  * Every module that persists routes through [[cached]]; [[release]] is
   * the shared cache-lifecycle hook — call it when done with a corpus (or
   * after rewriting one in-session). Over-releasing a sibling corpus's
   * frames in the same session only costs a recompute on next use, never
-  * correctness.
+  * correctness. `graft.Bench` calls [[release]] after each query's timed
+  * reps, which bounds a suite-length session's storage to one query's
+  * working set (the next query's warmup rebuilds what it needs, so the
+  * timed reps see the same cache state as before).
   *
-  * '''Byte budget (round 13).''' Registration alone is not enough: a
-  * suite-length session accumulates one family's pinned frames after
-  * another (the round-12 bench diag showed registered storage climbing
-  * monotonically to ~181 MB over 325 queries, +~0.55 MB/query and growing
-  * every round). [[enforce]] bounds it: whenever the REGISTERED frames'
-  * materialized storage (memory + disk, metered per cache entry through
-  * the block manager — localCheckpoint blocks and non-registry persists
-  * are not ours to evict and are excluded) exceeds [[budgetBytes]], the
-  * OLDEST-registered frames are unpersisted first until the total is back
-  * under budget. Oldest-first ≈ LRU under the suite's family locality:
-  * frames are built at a family's first query and reused within the
-  * family, so the oldest entries are the coldest. Eviction is a
-  * recompute-on-next-use cost only, never correctness ([[cached]] is
-  * called at CONSTRUCTION; an evicted frame's memo simply recomputes).
-  * [[enforce]] runs at every registration and once per bench query;
-  * CacheBudgetSpec pins the mechanics (oldest evicted, newest kept,
-  * post-enforce storage under budget).
+  * A site persists only when one of these holds; a frame two branches
+  * of one plan read but that is cheap to recompute is shared by exchange
+  * reuse instead (PlanSpec pins q210's), and a frame read only inside a
+  * `Staging` build or an iteration loop is `localCheckpoint()`ed, so nothing
+  * outlives the build:
+  *   - ''shared across queries'' over one corpus, by plan identity: the
+  *     Dedup shingle, pair, signature, gram and window frames, Graph's
+  *     sampled edges (q203/q257/q292), the basket family, `bpeTrain`
+  *     (q152/q160/q208), the known-item frames (q218/q258), the lang-ID
+  *     model (q328/q329) and the ANN cell ranking (q143/q150/q151);
+  *   - ''shared by the runs of one query'': every later run (Bench's
+  *     timed reps after the warmup, a repeated interactive query) reads
+  *     the frame from the first run's cache. Where two branches of the
+  *     plan read it, exchange reuse would share the first run's work but
+  *     not the later runs': dropping such persists made q178, q231, q282,
+  *     q296, q297 and q298 1.2–1.4× slower, and q100, q259, q289 and
+  *     q327 up to 3.5× slower, in a bench A/B whose controls held. Reuse
+  *     also misses outright where a frame is narrow (no exchange), is
+  *     topped by a join, or gets a different inferred filter per branch
+  *     (q278's revenue view: the supplier join's isnotnull(l_suppkey));
+  *   - ''plan pins'': frames whose single computation PlanSpec proves
+  *     through `InMemoryTableScan` (q246, q312, q299/q128);
+  *   - ''several actions'' (counts, heads) over one frame in the `*Scale`
+  *     gates: each action is its own job, and reuse never spans jobs.
   */
 object CacheRegistry {
-
-  /** Suite-lifetime storage budget for registered frames per session.
-    * 128 MB holds the current suite's hot tail with ~3× headroom over
-    * any single family's working set while capping the unbounded growth
-    * the round-12 verdict flagged; `private[graft] var` so the spec can
-    * shrink it to exercise eviction without staging 128 MB of data. */
-  private[graft] var budgetBytes: Long = 128L * 1024 * 1024
 
   private val registry =
     scala.collection.concurrent.TrieMap.empty[SparkSession, List[DataFrame]]
 
-  /** persist + record for release. One list entry per CONSTRUCTION (cheap;
-    * unpersist is idempotent on plan-deduped entries), and entries pinned
-    * to stopped sessions are evicted opportunistically. Newest first —
-    * [[enforce]] evicts from the tail. */
+  /** persist + record for release. A frame whose storage level is already
+    * set is returned as is, so a long session registers each cache entry
+    * once, not once per construction; entries pinned to stopped sessions
+    * are evicted opportunistically. */
   def cached(df: DataFrame): DataFrame = {
+    if (df.storageLevel.isValid) return df
     registry.keys.filter(_.sparkContext.isStopped).foreach(registry.remove)
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     registry.synchronized {
       val s = df.sparkSession
       registry(s) = p :: registry.getOrElse(s, Nil)
     }
-    enforce(df.sparkSession)
     p
   }
 
@@ -67,34 +69,9 @@ object CacheRegistry {
   /** Number of frames currently registered for `s` (spec probe). */
   def size(s: SparkSession): Int = registry.get(s).map(_.size).getOrElse(0)
 
-  /** Materialized storage (memory + disk bytes) currently held by the
-    * frames registered for `s`, deduped by cache entry (several
-    * registrations of one plan share one entry). Unmaterialized or
-    * evicted entries weigh 0. */
-  def storageBytes(s: SparkSession): Long = {
-    val ids = registry.getOrElse(s, Nil)
-      .flatMap(org.apache.spark.sql.graft.GraftCacheProbe.cachedRddId)
-      .toSet
-    if (ids.isEmpty) 0L
-    else s.sparkContext.getRDDStorageInfo
-      .filter(i => ids(i.id)).map(i => i.memSize + i.diskSize).sum
-  }
-
-  /** Evict oldest-registered frames while registered storage exceeds
-    * [[budgetBytes]]. Idempotent; cheap when under budget (one storage
-    * scan). Returns the number of frames evicted. */
-  def enforce(s: SparkSession): Int = registry.synchronized {
-    var evicted = 0
-    var frames = registry.getOrElse(s, Nil)
-    while (frames.nonEmpty && storageBytes(s) > budgetBytes) {
-      val oldest = frames.last
-      // blocking: the loop re-meters after each eviction — async
-      // unpersist would lag the meter and over-evict
-      oldest.unpersist(true)
-      frames = frames.init
-      registry(s) = frames
-      evicted += 1
-    }
-    evicted
-  }
+  /** Materialized storage (memory + disk bytes) of every persisted RDD in
+    * `s`'s block manager — registered frames, iteration checkpoints and
+    * any other persist alike. */
+  def storageBytes(s: SparkSession): Long =
+    s.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
 }

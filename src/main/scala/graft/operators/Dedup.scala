@@ -47,11 +47,6 @@ object Dedup {
     * and MinHash signatures all use it, mirrored exactly in the oracle. */
   val ShingleDfCap = 64
 
-  /** persist + record for release — the module's persists all route
-    * through the library-wide [[graft.CacheRegistry]] (shared with Graph)
-    * so [[invalidateClusters]] drains them in one hook. */
-  private def cached(df: DataFrame): DataFrame = graft.CacheRegistry.cached(df)
-
   /** (doc_id, s): distinct word 5-gram shingles per document, df-capped,
     * carried as 64-bit md5-prefix keys. Key narrowing happens BEFORE the
     * first shuffle: every downstream self-join, size count and MinHash
@@ -83,7 +78,7 @@ object Dedup {
     // staged-parquet materialization (minhashLshStaged) that a 100 TB run
     // would use — and the cache manager shares the one entry across
     // q62/q63/q66/q67 because their subtrees are plan-identical.
-    cached(raw.join(hot, Seq("s"), "left_anti"))
+    graft.CacheRegistry.cached(raw.join(hot, Seq("s"), "left_anti"))
   }
 
   private val shinglesSql =
@@ -143,7 +138,7 @@ object Dedup {
   private def commonPairs(sh: DataFrame): DataFrame = {
     val a = sh.select(col("doc_id").as("i"), col("s"))
     val b = sh.select(col("doc_id").as("j"), col("s"))
-    cached(a.join(b, "s").where(col("i") < col("j"))
+    graft.CacheRegistry.cached(a.join(b, "s").where(col("i") < col("j"))
       .groupBy(col("i"), col("j")).agg(count(lit(1)).as("c")))
   }
 
@@ -199,7 +194,7 @@ object Dedup {
         .reduce(_ + _).as(s"b$k"))
     // the 64-sum aggregation is the expensive stage — compute it once;
     // plan identity shares the one cache entry between q64 and q68
-    cached(nibs.groupBy(col("doc_id")).agg(sAggs.head, sAggs.tail: _*)
+    graft.CacheRegistry.cached(nibs.groupBy(col("doc_id")).agg(sAggs.head, sAggs.tail: _*)
       .select(col("doc_id") +: bands: _*))
   }
 
@@ -253,7 +248,7 @@ object Dedup {
       min(substring(md5(concat(lit(s"${m}_"), col("s"))), p * 8 + 1, 8))
         .as(s"m${m * 4 + p}")) :+ count(lit(1)).as("n")
     // used by the band explode AND the Jaccard denominators — one compute
-    cached(sh.groupBy(col("doc_id"))
+    graft.CacheRegistry.cached(sh.groupBy(col("doc_id"))
       .agg(sigAggs.head, sigAggs.tail: _*))
   }
 
@@ -294,7 +289,7 @@ object Dedup {
     // both consumers (q79, q89) reference the gram frame twice per plan
     // (probe + build / df-agg + join-back); same rationale as the
     // shingles() persist — one scan+explode+distinct, not two
-    cached(t(s, d, "documents")
+    graft.CacheRegistry.cached(t(s, d, "documents")
       .select(col("doc_id"), col("source"), toks.as("toks"))
       .filter(size(col("toks")) >= n)
       .select(col("doc_id"), col("source"), explode(transform(
@@ -438,7 +433,7 @@ object Dedup {
     * 1-based to match the oracle's `range(1, …)` spelling. */
   private def rollingWindows(s: SparkSession, d: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    cached(t(s, d, "documents")
+    graft.CacheRegistry.cached(t(s, d, "documents")
       .filter(size(split(col("text"), " ")) >= SpanWin)
       .select(col("doc_id"),
         posexplode(expr(s"rolling_window_hashes(text, $SpanWin)"))
@@ -865,7 +860,7 @@ object Dedup {
         .join(sh.select(col("doc_id").as("j"), col("s")), "s")
         .where(col("i") < col("j"))
         .groupBy(col("i"), col("j")).agg(count(lit(1)).as("c"))
-      val truth = cached(jaccardOf(sigs.select(col("doc_id"), col("n")),
+      val truth = graft.CacheRegistry.cached(jaccardOf(sigs.select(col("doc_id"), col("n")),
           common)
         .filter(col("jac") >= JaccardThreshold)
         .select(col("i"), col("j")))
@@ -1062,7 +1057,7 @@ object Dedup {
       val c = t(s, d, "documents")
         .select(md5(col("text")).as("h"), col("source"))
         .groupBy(col("h"), col("source")).agg(count(lit(1)).as("cnt"))
-        .transform(cached)
+        .transform(graft.CacheRegistry.cached)
       val cross = c.select(col("h"), col("source").as("src_a"),
           col("cnt").as("ca"))
         .join(c.select(col("h"), col("source").as("src_b"),
@@ -1112,7 +1107,7 @@ object Dedup {
           "CAST(conv(substring(md5(concat('typo_', w)), 2, 1), 16, 10) AS INT) % length(w)"))
         .select(concat(col("w"), lit("~")).as("id"),
           expr("concat(substring(w, 1, k), substring(w, k + 2))").as("str"))
-      val corpus = cached(base.unionByName(typo))
+      val corpus = graft.CacheRegistry.cached(base.unionByName(typo))
       editDistPairs(corpus).orderBy("a", "b")
     }),
 
@@ -1354,7 +1349,7 @@ object Dedup {
       val toks = split(col("text"), " ")
       // referenced twice (df-count build side + join-back probe side);
       // same rationale as grams(): one scan+explode, not two
-      val wins = cached(t(s, d, "documents")
+      val wins = graft.CacheRegistry.cached(t(s, d, "documents")
         .select(col("doc_id"), toks.as("toks"))
         .filter(size(col("toks")) >= SpanWin)
         .select(col("doc_id"), posexplode(transform(

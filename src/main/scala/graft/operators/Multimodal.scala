@@ -492,7 +492,8 @@ object Multimodal {
           explode(expr("avi_frame_ahashes(content)")).as("h"))
         .select(col("name"), col("h").cast("string").as("s"))
         .distinct()
-        .transform(graft.CacheRegistry.cached)
+      // not persisted: all four reads (signatures, both pair sides) share
+      // the distinct's exchange, so the decode runs once (PlanSpec pin)
       // q63's split-digest signatures: 4 md5 calls, 4 8-hex slices each
       val sigAggs = (for (m <- 0 until 4; p <- 0 until 4) yield
         min(substring(md5(concat(lit(s"${m}_"), col("s"))), p * 8 + 1, 8))

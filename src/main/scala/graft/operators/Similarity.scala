@@ -222,8 +222,10 @@ object Similarity {
     * components after [[PqIters]] Lloyd steps over each subspace's
     * subvectors (q129's arithmetic-parity rules verbatim: exact integer
     * distances, trunc division, empty-cell carry). Driver loop builds
-    * plan only; each round's frame is registry-cached because the next
-    * iteration references it twice (distance join + empty-cell carry).
+    * plan only; each round's frame is localCheckpointed because the next
+    * iteration references it twice (distance join + empty-cell carry),
+    * and so is the exploded training set every round reads; nothing
+    * outlives the build.
     * Staged once per corpus ([[graft.Staging.frame]], like every trained
     * model frame here): training loops grow the plan per iteration, and a
     * consumer re-analyzing that lineage on every construction cost 1.3 s
@@ -237,7 +239,7 @@ object Similarity {
         pmod(col("i"), lit(SubDim)).as("im"),
         col("x").cast("double").as("xd"),
         round(col("x").cast("double") * 1e9).cast("long").as("xn"))
-      .transform(graft.CacheRegistry.cached)
+      .localCheckpoint()
     var cent = exm.filter(col("vec_id") < PqK)
       .select(col("m"), col("vec_id").cast("int").as("k"), col("im"),
         col("xn").as("cn"))
@@ -260,7 +262,7 @@ object Similarity {
         .select(col("m"), col("k"), col("im"),
           when(col("n").isNull, col("cn_prev"))
             .otherwise(expr("sn div n")).as("cn"))
-        .transform(graft.CacheRegistry.cached)
+        .localCheckpoint()
     }
     cent
   }
@@ -331,15 +333,13 @@ object Similarity {
       .where(col("vec_id") =!= col("q_id"))
   }
 
-  /** Exploded nano-unit components (vec_id, i(0-based), xd, xn) —
-    * referenced by every Lloyd iteration's distance join AND mean update,
-    * and by q143's cell assignment; registry-cached. */
+  /** Exploded nano-unit components (vec_id, i(0-based), xd, xn) — the
+    * Lloyd training set and the input of q143's cell assignment. */
   private def exnFrame(s: SparkSession, d: String): DataFrame =
     t(s, d, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "x")))
       .select(col("vec_id"), col("i"), col("x").cast("double").as("xd"),
         round(col("x").cast("double") * 1e9).cast("long").as("xn"))
-      .transform(graft.CacheRegistry.cached)
 
   /** The trained codebook: (k, i, cn, n) after LloydIters integer-exact
     * Lloyd steps (see q129's scaladoc for the arithmetic-parity rules).
@@ -355,8 +355,10 @@ object Similarity {
     * `seedPred` picks the LloydK seed vectors from that training set. */
   private def lloydCentroidsOn(s: SparkSession, d: String,
       train: Option[Column], seedPred: Column): DataFrame = {
+    // read by every iteration's distance join AND mean update, inside a
+    // Staging build: checkpointed, so nothing outlives the build
     val exn0 = exnFrame(s, d)
-    val exn = train.map(exn0.filter).getOrElse(exn0)
+    val exn = train.map(exn0.filter).getOrElse(exn0).localCheckpoint()
     var cent = exn.filter(seedPred)
       .select(col("vec_id").as("k"), col("i"), col("xn").as("cn"),
         lit(0L).as("n"))
@@ -382,8 +384,8 @@ object Similarity {
             .otherwise(expr("sn div n")).as("cn"),
           coalesce(col("n"), lit(0L)).as("n"))
         // referenced twice next iteration (distance join + fallback) —
-        // persist or the whole preceding chain recomputes per reference
-        .transform(graft.CacheRegistry.cached)
+        // checkpoint or the whole preceding chain recomputes per reference
+        .localCheckpoint()
     }
     cent
   }
@@ -417,7 +419,7 @@ object Similarity {
     // a subset ranking (q151 delta admission / query probes) explodes its
     // OWN filtered scan — vec_id filter below the explode, so per-vector
     // assignment work is proportional to the subset, not the corpus; the
-    // full ranking shares the registry-cached corpus-wide frame
+    // full ranking explodes the whole corpus
     val exn = only match {
       case None => exnFrame(s, d)
       case Some(p) => t(s, d, "embeddings").filter(p)

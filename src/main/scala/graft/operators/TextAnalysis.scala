@@ -316,8 +316,10 @@ object TextAnalysis {
     * Distributed shape documented at the q153 use site. */
   private[operators] def bm25Ranked(s: SparkSession, d: String): DataFrame = {
     val tf = lexPostingsOn(s, d, None)
-      // postings feed dl, df AND the scoring join — one shuffle, reused
-      .transform(graft.CacheRegistry.cached)
+      // postings feed dl, df AND the scoring join, and are read only
+      // inside the bm25-ranked stage build: checkpointed, so nothing
+      // outlives the build
+      .localCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     bm25Serve(s, tf, dl)
   }
@@ -366,7 +368,8 @@ object TextAnalysis {
   private def lexWrite(s: SparkSession, d: String,
       pred: Option[org.apache.spark.sql.Column], dir: String,
       mode: String): Unit = {
-    val tf = lexPostingsOn(s, d, pred).transform(graft.CacheRegistry.cached)
+    // two writes, two jobs: checkpoint so the postings compute once
+    val tf = lexPostingsOn(s, d, pred).localCheckpoint()
     tf.withColumn("bucket", lexBucketCol(col("term")))
       .write.mode(mode).partitionBy("bucket").parquet(s"$dir/postings")
     tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))

@@ -109,7 +109,8 @@ class DocConsistencySpec extends SparkSpec {
       .map(f => java.nio.file.Files.readString(f))
     assert(sources.nonEmpty, "src/main must be readable from the repo root")
     val gone = Seq("SessionMemo", "forgetDir(", "forgetAnnStages",
-      "forgetLexStages").filter(n => sources.exists(_.contains(n)))
+      "forgetLexStages", "GraftCacheProbe", "budgetBytes",
+      "CacheRegistry.enforce").filter(n => sources.exists(_.contains(n)))
     assert(gone.isEmpty, s"memoize through Staging.frame, forget through " +
       s"Staging.forgetCorpus: $gone")
   }

@@ -504,6 +504,23 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("q210: the decoded frame-hash set computes once through exchange reuse, no cache") {
+    // the distinct (clip, frame-hash) set feeds the signatures and both
+    // sides of the pair join; without a persist, the executed AQE plan
+    // must reuse the distinct's exchange, so the AVI files are read and
+    // decoded once
+    val df = SparkEntry.queries("q210_video_trim_dedup")(spark, sf0001)
+    df.collect()
+    val full = df.queryExecution.executedPlan.toString
+    val p = full.substring(full.indexOf("== Final Plan =="),
+      full.indexOf("== Initial Plan =="))
+    assert(p.contains("ReusedExchange"),
+      s"the pair sides must reuse the frame-hash exchange:\n$p")
+    assert(!p.contains("InMemoryTableScan"), s"no cache on this plan:\n$p")
+    val fileScans = p.linesIterator.count(_.contains("Scan binaryFile"))
+    assert(fileScans == 1, s"the clips must be read once, found $fileScans:\n$p")
+  }
+
   test("q312: true Q11's per-part value frame computes once (cache), nation broadcasts") {
     val p = plan("q312_tpch_q11_ps")
     assert(p.contains("InMemoryTableScan"),

@@ -50,6 +50,12 @@ class GraphSpec extends SparkSpec {
       "edges + deg must route through the shared registry")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
       "materialization must actually cache blocks")
+    // a second construction finds its frames already cached and registers
+    // nothing new: one registry entry per cache entry, not per construction
+    val registered = graft.CacheRegistry.size(spark)
+    Graph.queries("q128_pagerank")(spark, sf0001).collect()
+    assert(graft.CacheRegistry.size(spark) == registered,
+      "re-running q128 must not grow the registry")
     graft.CacheRegistry.release(spark)
     assert(graft.CacheRegistry.size(spark) == 0)
     assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before),
