@@ -19,9 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * A site persists only when one of these holds; a frame two branches
   * of one plan read but that is cheap to recompute is shared by exchange
-  * reuse instead (PlanSpec pins q210's), and a frame read only inside a
-  * `Staging` build or an iteration loop is `localCheckpoint()`ed, so nothing
-  * outlives the build:
+  * reuse instead (PlanSpec pins q210's), a frame read only inside a
+  * `Staging` build is checkpointed by `Staging.checkpoint`, which frees it
+  * when the stage commits, and one read only inside an iteration loop is
+  * `localCheckpoint()`ed:
   *   - ''shared across queries'' over one corpus, by plan identity: the
   *     Dedup shingle, pair, signature, gram and window frames, Graph's
   *     sampled edges (q203/q257/q292), the basket family, `bpeTrain`

@@ -111,7 +111,7 @@ object Staging {
         if (marker(key).isFile && !hasData(new java.io.File(dataDir)))
           forget(key)
         if (!marker(key).isFile) {
-          write
+          freeingCheckpoints(write)
           if (!hasData(new java.io.File(dataDir)))
             throw new IllegalStateException(
               s"Staging.once('$key'): write left no data at '$dataDir'. " +
@@ -171,7 +171,7 @@ object Staging {
             java.nio.file.Files.move(tmp.toPath, pre.toPath,
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           }
-          write
+          freeingCheckpoints(write)
           val m = marker(key)
           Option(m.getParentFile).foreach(_.mkdirs())
           m.createNewFile()
@@ -180,6 +180,33 @@ object Staging {
         written(key) = true
       }
     }
+
+  /** RDDs the stage build running on this thread has checkpointed. */
+  private val buildCheckpoints =
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]]
+
+  /** `df.localCheckpoint()` for a frame a stage build reads more than
+    * once. Its blocks are freed (non-blocking) as soon as the enclosing
+    * [[once]] or [[onceAppend]] write returns, instead of staying until GC
+    * collects the RDD; the stage's parquet is what later readers scan.
+    * Outside a build it is a plain local checkpoint. */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint()
+    Option(buildCheckpoints.get).foreach(_ ++= cp.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    })
+    cp
+  }
+
+  private def freeingCheckpoints(write: => Unit): Unit = {
+    val outer = buildCheckpoints.get
+    val mine = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    buildCheckpoints.set(mine)
+    try write finally {
+      buildCheckpoints.set(outer)
+      mine.foreach(_.unpersist(blocking = false))
+    }
+  }
 
   private def listFilesUnder(dirs: Seq[String]): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =

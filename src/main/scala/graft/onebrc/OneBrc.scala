@@ -17,9 +17,13 @@ import graft.Tables._
   *     -> Format/Sink
   *
   * Spark executes it as HashAggregateExec(Partial) -> shuffle ->
-  * HashAggregateExec(Final) -> SortExec, i.e. the partial-agg / final-merge
-  * structure the reference hand-rolls (main.rs:174-204) falls out of
-  * Catalyst for free. At 100 TB the same plan holds: the partial aggregate
+  * HashAggregateExec(Final) -> Coalesce(1) -> SortExec, i.e. the
+  * partial-agg / final-merge structure the reference hand-rolls
+  * (main.rs:174-204) falls out of Catalyst for free, and the <=413-row
+  * answer sorts in one reducer task instead of a range exchange. Over the
+  * `brc` connector the partial aggregate folds into the scan
+  * (BrcDataSource's pushed aggregate), so the query is one map job and one
+  * result job. At 100 TB the same plan holds: the partial aggregate
   * collapses each input split to <=413 rows before the shuffle, so the
   * exchange moves O(stations * partitions) rows, never O(input).
   */
@@ -59,7 +63,7 @@ object OneBrc {
         (col("minT").cast("double") / 10.0).as("min_measure"),
         round1(col("sumT").cast("double") / 10.0 / col("cnt")).as("mean_measure"),
         (col("maxT").cast("double") / 10.0).as("max_measure"))
-      .orderBy("station")
+      .transform(stationOrder)
 
   /** Per-station tenths partials (station, minT, maxT, sumT, cnt) over
     * (station, t) — batch or streaming input. */
@@ -83,8 +87,15 @@ object OneBrc {
         min(col("measure")).as("min_measure"),
         round1(mean).as("mean_measure"),
         max(col("measure")).as("max_measure"))
-      .orderBy("station")
+      .transform(stationOrder)
   }
+
+  /** The answer in station order. It has one row per station (413 in the
+    * generated data, at most 10,000 by the 1BRC spec), so one reducer task
+    * sorts it: no range-sampling job and no range exchange. The sort key is
+    * the group key, so no ties are left to order. */
+  private def stationOrder(answer: DataFrame): DataFrame =
+    answer.coalesce(1).sortWithinPartitions("station")
 
   /** Shared oracle-SQL shape for brcAgg (DuckDB). */
   def brcAggSql(from: String): String =

@@ -222,15 +222,15 @@ object Similarity {
     * components after [[PqIters]] Lloyd steps over each subspace's
     * subvectors (q129's arithmetic-parity rules verbatim: exact integer
     * distances, trunc division, empty-cell carry). Driver loop builds
-    * plan only; each round's frame is localCheckpointed because the next
+    * plan only; each round's frame is checkpointed because the next
     * iteration references it twice (distance join + empty-cell carry),
-    * and so is the exploded training set every round reads; nothing
-    * outlives the build.
+    * and so is the exploded training set every round reads;
+    * `Staging.checkpoint` frees them all once the stage has committed.
     * Staged once per corpus ([[graft.Staging.frame]], like every trained
     * model frame here): training loops grow the plan per iteration, and a
     * consumer re-analyzing that lineage on every construction cost 1.3 s
     * of q143's 2.5 s run at sf0.1, caches hot. */
-  private def pqTrainedCodebook(s: SparkSession, d: String): DataFrame =
+  private[operators] def pqTrainedCodebook(s: SparkSession, d: String): DataFrame =
       graft.Staging.frame(s, "ann-pq-codebook", d) {
     val M = 4; val SubDim = Dim / M
     val exm = t(s, d, "embeddings")
@@ -239,7 +239,7 @@ object Similarity {
         pmod(col("i"), lit(SubDim)).as("im"),
         col("x").cast("double").as("xd"),
         round(col("x").cast("double") * 1e9).cast("long").as("xn"))
-      .localCheckpoint()
+      .transform(graft.Staging.checkpoint)
     var cent = exm.filter(col("vec_id") < PqK)
       .select(col("m"), col("vec_id").cast("int").as("k"), col("im"),
         col("xn").as("cn"))
@@ -262,7 +262,7 @@ object Similarity {
         .select(col("m"), col("k"), col("im"),
           when(col("n").isNull, col("cn_prev"))
             .otherwise(expr("sn div n")).as("cn"))
-        .localCheckpoint()
+        .transform(graft.Staging.checkpoint)
     }
     cent
   }
@@ -358,7 +358,7 @@ object Similarity {
     // read by every iteration's distance join AND mean update, inside a
     // Staging build: checkpointed, so nothing outlives the build
     val exn0 = exnFrame(s, d)
-    val exn = train.map(exn0.filter).getOrElse(exn0).localCheckpoint()
+    val exn = graft.Staging.checkpoint(train.map(exn0.filter).getOrElse(exn0))
     var cent = exn.filter(seedPred)
       .select(col("vec_id").as("k"), col("i"), col("xn").as("cn"),
         lit(0L).as("n"))
@@ -385,7 +385,7 @@ object Similarity {
           coalesce(col("n"), lit(0L)).as("n"))
         // referenced twice next iteration (distance join + fallback) —
         // checkpoint or the whole preceding chain recomputes per reference
-        .localCheckpoint()
+        .transform(graft.Staging.checkpoint)
     }
     cent
   }

@@ -319,7 +319,7 @@ object TextAnalysis {
       // postings feed dl, df AND the scoring join, and are read only
       // inside the bm25-ranked stage build: checkpointed, so nothing
       // outlives the build
-      .localCheckpoint()
+      .transform(graft.Staging.checkpoint)
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     bm25Serve(s, tf, dl)
   }
@@ -369,7 +369,7 @@ object TextAnalysis {
       pred: Option[org.apache.spark.sql.Column], dir: String,
       mode: String): Unit = {
     // two writes, two jobs: checkpoint so the postings compute once
-    val tf = lexPostingsOn(s, d, pred).localCheckpoint()
+    val tf = graft.Staging.checkpoint(lexPostingsOn(s, d, pred))
     tf.withColumn("bucket", lexBucketCol(col("term")))
       .write.mode(mode).partitionBy("bucket").parquet(s"$dir/postings")
     tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))

@@ -9,7 +9,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Avg, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -41,6 +42,12 @@ import graft.functions.BrcParse
   * (the reference's error-not-skip semantics, main.rs:141-150) whenever
   * `t` is projected; a pruned scan (count(*), station-only) validates
   * only line structure, not the measure bytes it never reads.
+  *
+  * Pushed aggregate: for `GROUP BY station` over MIN, MAX, SUM and COUNT
+  * of `t` (no DISTINCT) or COUNT(*) — `OneBrc.tenthsPartials` — the scan
+  * folds each split into one row per station ([[BrcFoldReader]], the
+  * reference's per-chunk station table) and Spark keeps the final merge.
+  * Anything else, or a filter left above the scan, keeps row output.
   */
 class BrcDataSource extends TableProvider
   with org.apache.spark.sql.sources.DataSourceRegister {
@@ -71,6 +78,38 @@ object BrcDataSource {
   val schema: StructType = StructType(Seq(
     StructField("station", StringType, nullable = false),
     StructField("t", LongType, nullable = false)))
+
+  // the per-station value each pushed aggregate emits (BrcFoldReader
+  // keeps min, max, sum and count of a station at these offsets)
+  val FoldMin = 0
+  val FoldMax = 1
+  val FoldSum = 2
+  val FoldCount = 3     // COUNT(t): reads and validates `t`
+  val FoldCountStar = 4 // COUNT(*): the count again, station only
+
+  /** One fold code per aggregate of `a`, in pushed order, when `a` is
+    * `GROUP BY station` over MIN, MAX, SUM and COUNT of `t` (no DISTINCT)
+    * or COUNT(*) — the set `OneBrc.tenthsPartials` asks for. None for
+    * anything else: the scan keeps row output. */
+  def foldKinds(a: Aggregation): Option[Array[Int]] = {
+    def isCol(e: org.apache.spark.sql.connector.expressions.Expression,
+        name: String): Boolean = e match {
+      case r: NamedReference => r.fieldNames.sameElements(Array(name))
+      case _ => false
+    }
+    val kinds = a.aggregateExpressions.map {
+      case m: Min if isCol(m.column, "t") => FoldMin
+      case m: Max if isCol(m.column, "t") => FoldMax
+      case s: Sum if !s.isDistinct && isCol(s.column, "t") => FoldSum
+      case c: Count if !c.isDistinct && isCol(c.column, "t") => FoldCount
+      case _: CountStar => FoldCountStar
+      case _ => -1
+    }
+    val byStation = a.groupByExpressions.length == 1 &&
+      isCol(a.groupByExpressions()(0), "station")
+    if (byStation && kinds.nonEmpty && !kinds.contains(-1)) Some(kinds)
+    else None
+  }
 }
 
 class BrcTable(paths: Seq[String], splitBytes: Long)
@@ -124,11 +163,27 @@ class BrcTable(paths: Seq[String], splitBytes: Long)
     // different session's conf (or none) in multi-session apps
     val sconf = new org.apache.spark.util.SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    new ScanBuilder with SupportsPushDownRequiredColumns {
+    new ScanBuilder with SupportsPushDownRequiredColumns
+        with SupportsPushDownAggregates {
       private var pruned = BrcDataSource.schema
+      private var pushed: Option[Aggregation] = None
+      private var offeredAvg = false
       override def pruneColumns(requiredSchema: StructType): Unit =
         pruned = requiredSchema
-      override def build(): Scan = new BrcScanV2(paths, splitBytes, pruned, sconf)
+      // Spark offers avg(t) first as AVG, then again rewritten to SUM and
+      // COUNT. avg of a long sums in double and never overflows; a pushed
+      // long sum would throw, so a query that asked for avg keeps rows.
+      override def supportCompletePushDown(a: Aggregation): Boolean = {
+        offeredAvg ||= a.aggregateExpressions.exists(_.isInstanceOf[Avg])
+        false // Spark keeps the final merge
+      }
+      override def pushAggregation(a: Aggregation): Boolean = {
+        pushed = Some(a).filter(_ =>
+          !offeredAvg && BrcDataSource.foldKinds(a).isDefined)
+        pushed.isDefined
+      }
+      override def build(): Scan =
+        new BrcScanV2(paths, splitBytes, pruned, pushed, sconf)
     }
   }
 }
@@ -230,13 +285,25 @@ class BrcDataWriter(path: String,
   override def close(): Unit = {}
 }
 
+/** The `brc` scan: one row per line of `pruned`, or with a pushed
+  * aggregate `agg` one row per station and split (`station`, then one
+  * LONG per aggregate). */
 class BrcScanV2(paths: Seq[String], splitBytes: Long, pruned: StructType,
+    agg: Option[Aggregation],
     sconf: org.apache.spark.util.SerializableConfiguration)
   extends Scan with Batch {
-  override def readSchema(): StructType = pruned
+  private val kinds = agg.flatMap(BrcDataSource.foldKinds)
+  override def readSchema(): StructType = agg.fold(pruned) { a =>
+    StructType(BrcDataSource.schema("station") +:
+      a.aggregateExpressions.toSeq.map(f =>
+        StructField(f.describe, LongType, nullable = false)))
+  }
   override def toBatch: Batch = this
   override def description(): String =
-    s"BrcScan ${paths.mkString(",")} ${pruned.fieldNames.mkString(",")}"
+    s"BrcScan ${paths.mkString(",")} " + agg.fold(pruned.fieldNames.mkString(",")) {
+      a => a.aggregateExpressions.map(_.describe)
+        .mkString("PushedAggregation: [", ", ", "] PushedGroupBy: [station]")
+    }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = sconf.value
@@ -274,11 +341,15 @@ class BrcScanV2(paths: Seq[String], splitBytes: Long, pruned: StructType,
   override def createReaderFactory(): PartitionReaderFactory = {
     // capture only serializable values, not `this`
     val fieldNames = pruned.fieldNames.toSeq
+    val foldKinds = kinds
     val confForReaders = sconf
     new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new BrcPartitionReader(partition.asInstanceOf[BrcInputPartition],
-          fieldNames, confForReaders)
+      override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+        val p = partition.asInstanceOf[BrcInputPartition]
+        foldKinds.fold[PartitionReader[InternalRow]](
+          new BrcPartitionReader(p, fieldNames, confForReaders))(
+          new BrcFoldReader(p, _, confForReaders))
+      }
     }
   }
 }
@@ -289,9 +360,12 @@ case class BrcInputPartition(path: String, start: Long, end: Long)
 /** One pass over [start, end): reused 4 MiB buffer, reused mutable row.
   * Lines span buffer refills via compaction (the tail fragment is moved to
   * the buffer head before the next read — the CHUNK_EXCESS carry-over,
-  * rust_1brc/src/main.rs:22-25, without the bounded-line-length bet). */
+  * rust_1brc/src/main.rs:22-25, without the bounded-line-length bet).
+  * With a `fold` sink each line goes to [[BrcFoldReader.add]] instead of
+  * the row. */
 class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
-    sconf: org.apache.spark.util.SerializableConfiguration)
+    sconf: org.apache.spark.util.SerializableConfiguration,
+    fold: BrcFoldReader = null)
   extends PartitionReader[InternalRow] {
 
   // column pruning: parse work is proportional to the projected columns —
@@ -371,20 +445,22 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
         if (stationOrd >= 0 || tOrd >= 0) {
           val sep = (BrcParse.sepIndex(buf, BYTE_ARRAY_OFFSET + lineStart,
             BYTE_ARRAY_OFFSET + lineEnd) - BYTE_ARRAY_OFFSET).toInt
+          var t = 0L
           if (tOrd >= 0) {
-            val t = if (sep < lineEnd) BrcParse.parseTenths(buf,
+            t = if (sep < lineEnd) BrcParse.parseTenths(buf,
               BYTE_ARRAY_OFFSET + sep + 1, BYTE_ARRAY_OFFSET + lineEnd)
             else Long.MinValue
             if (t == Long.MinValue)
               throw new IllegalArgumentException("malformed 1BRC line: " +
                 new String(buf, lineStart, lineEnd - lineStart, "UTF-8"))
-            row.setLong(tOrd, t)
           }
-          if (stationOrd >= 0) {
-            if (sep >= lineEnd)
-              throw new IllegalArgumentException("missing ';' in 1BRC line: " +
-                new String(buf, lineStart, lineEnd - lineStart, "UTF-8"))
-            row.update(stationOrd, UTF8String.fromBytes(
+          if (stationOrd >= 0 && sep >= lineEnd)
+            throw new IllegalArgumentException("missing ';' in 1BRC line: " +
+              new String(buf, lineStart, lineEnd - lineStart, "UTF-8"))
+          if (fold != null) fold.add(buf, lineStart, sep, t)
+          else {
+            if (tOrd >= 0) row.setLong(tOrd, t)
+            if (stationOrd >= 0) row.update(stationOrd, UTF8String.fromBytes(
               java.util.Arrays.copyOfRange(buf, lineStart, sep)))
           }
         }
@@ -397,4 +473,96 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
 
   override def get(): InternalRow = row
   override def close(): Unit = in.close()
+}
+
+/** The pushed partial aggregate of one split (R4/R5's per-chunk station
+  * table, PAPER.md §0). [[BrcPartitionReader]]'s line walk hands every
+  * line to [[add]], which folds it into an open-addressing table keyed on
+  * the station bytes (413 keys in the 1BRC data, at most 10,000 by its
+  * spec). Once the walk is drained, the reader emits one row per station:
+  * `station`, then one LONG per pushed aggregate, in pushed order. The
+  * sum uses `Math.addExact`, so overflow throws as Spark's ANSI `Sum`
+  * does. */
+class BrcFoldReader(p: BrcInputPartition, kinds: Array[Int],
+    sconf: org.apache.spark.util.SerializableConfiguration)
+  extends PartitionReader[InternalRow] {
+  import BrcDataSource._
+
+  private val walk = new BrcPartitionReader(p,
+    if (kinds.forall(_ == FoldCountStar)) Seq("station") else Seq("station", "t"),
+    sconf, this)
+  private var keys = new Array[Array[Byte]](1024)
+  private var hashes = new Array[Int](keys.length)
+  // per slot: min, max, sum, count — a fold code is its value's offset
+  private var acc = new Array[Long](4 * keys.length)
+  private var size = 0
+  private var drained = false
+  private var slot = -1
+  private val row = new SpecificInternalRow(
+    StringType +: kinds.toSeq.map(_ => LongType))
+
+  private def home(h: Int): Int = (h ^ (h >>> 16)) & (keys.length - 1)
+
+  /** Fold the line whose station is `buf[from, sep)` and measure `t`. */
+  private[sources] def add(buf: Array[Byte], from: Int, sep: Int, t: Long): Unit = {
+    var h = 0
+    var i = from
+    while (i < sep) { h = 31 * h + buf(i); i += 1 }
+    var s = home(h)
+    while (true) {
+      val k = keys(s)
+      val a = 4 * s
+      if (k == null) {
+        keys(s) = java.util.Arrays.copyOfRange(buf, from, sep)
+        hashes(s) = h
+        acc(a) = t; acc(a + 1) = t; acc(a + 2) = t; acc(a + 3) = 1
+        size += 1
+        if (2 * size > keys.length) grow()
+        return
+      }
+      if (hashes(s) == h &&
+          java.util.Arrays.equals(k, 0, k.length, buf, from, sep)) {
+        if (t < acc(a)) acc(a) = t
+        if (t > acc(a + 1)) acc(a + 1) = t
+        acc(a + 2) = Math.addExact(acc(a + 2), t)
+        acc(a + 3) += 1
+        return
+      }
+      s = (s + 1) & (keys.length - 1)
+    }
+  }
+
+  /** Double the table, keeping the load at most one half. */
+  private def grow(): Unit = {
+    val (ok, oh, oa) = (keys, hashes, acc)
+    keys = new Array(2 * ok.length)
+    hashes = new Array(keys.length)
+    acc = new Array(4 * keys.length)
+    for (j <- ok.indices if ok(j) != null) {
+      var s = home(oh(j))
+      while (keys(s) != null) s = (s + 1) & (keys.length - 1)
+      keys(s) = ok(j)
+      hashes(s) = oh(j)
+      System.arraycopy(oa, 4 * j, acc, 4 * s, 4)
+    }
+  }
+
+  override def next(): Boolean = {
+    if (!drained) { while (walk.next()) {}; drained = true }
+    slot += 1
+    while (slot < keys.length && keys(slot) == null) slot += 1
+    slot < keys.length
+  }
+
+  override def get(): InternalRow = {
+    row.update(0, UTF8String.fromBytes(keys(slot)))
+    var j = 0
+    while (j < kinds.length) {
+      row.setLong(j + 1, acc(4 * slot + math.min(kinds(j), FoldCount)))
+      j += 1
+    }
+    row
+  }
+
+  override def close(): Unit = walk.close()
 }

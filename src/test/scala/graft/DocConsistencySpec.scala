@@ -128,6 +128,8 @@ class DocConsistencySpec extends SparkSpec {
       .map(_.split(java.util.regex.Pattern.quote(needle), -1).length - 1).sum
     assert(count("if (seenDot && frac == 0)") == 1,
       "parse 1BRC measures through BrcParse.parseTenths")
+    assert(count("System.arraycopy(buf, pos, buf, 0, limit - pos)") == 1,
+      "walk 1BRC splits through BrcPartitionReader's one refill loop")
     val gone = Seq("readMeasurementsFast", "readMeasurementsTurbo",
       "readMeasurementsTenths", "\"brc_parse\"").filter(count(_) > 0)
     assert(gone.isEmpty, s"removed 1BRC text paths are back: $gone")

@@ -68,6 +68,9 @@ class PlanSpec extends SparkSpec {
     // mutex merge (SURVEY §3.2)
     assert("HashAggregate".r.findAllIn(p).length >= 2)
     assert(p.contains("Exchange hashpartitioning(station"))
+    // the ≤413-row answer sorts in its one reducer task: no range
+    // sampling job and no range exchange
+    assert(!p.contains("rangepartitioning"), s"no range exchange:\n$p")
   }
 
   test("q70: the tiny query side broadcasts; candidates never shuffle") {
@@ -80,6 +83,11 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BatchScan"), "DataSource V2 scan node expected")
     assert("HashAggregate".r.findAllIn(p).length >= 2,
       "partial+final aggregation must sit directly on the connector scan")
+    // the partial aggregate folds into the scan; Spark keeps the merge
+    assert(p.contains("BatchScan") && p.contains(
+      "PushedAggregation: [MIN(t), SUM(t), COUNT(*), MAX(t)] PushedGroupBy: [station]"),
+      s"the brc scan must fold the partials:\n$p")
+    assert(!p.contains("rangepartitioning"), s"no range exchange:\n$p")
   }
 
   test("q45: SQL-text predicates reach the parquet scan") {

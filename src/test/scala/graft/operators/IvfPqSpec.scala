@@ -195,4 +195,22 @@ class IvfPqSpec extends SparkSpec {
     assert(dirs.count(_.startsWith("cell=")) == Similarity.LloydK,
       s"stage must be hive-partitioned on cell: ${dirs.toSeq}")
   }
+
+  test("ann-pq-codebook: the build's checkpointed blocks are freed once the stage commits") {
+    // a corpus of its own, so this build runs here and is not a memo hit
+    val corpus = tempDir("graft_pq_free")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sf0001, "embeddings.parquet"),
+      corpus.resolve("embeddings.parquet"))
+    val sc = spark.sparkContext
+    val firstId = sc.emptyRDD[Int].id // every RDD the build makes is newer
+    val cb = Similarity.pqTrainedCodebook(spark, corpus.toString)
+    def held = sc.getRDDStorageInfo.filter(_.id > firstId).map(_.name).toSeq
+    // the free is non-blocking: allow the block manager a moment
+    val deadline = System.nanoTime() + 10000000000L
+    while (held.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(held.isEmpty, s"build blocks still held after the stage committed: $held")
+    assert(cb.count() == 4L * Similarity.PqK * (Similarity.Dim / 4),
+      "the staged codebook still serves every (m, k, im) centroid")
+  }
 }

@@ -12,26 +12,13 @@ import org.scalacheck.Gen
   * hand-rolled CHUNK logic bets on and never tests.
   */
 class BrcSourcePropertySpec extends SparkSpec {
-
-  private val stationGen = Gen.oneOf(
-    "Oslo", "Zürich", "St. John's", "Washington, D.C.", "Abéché", "A")
-  private val lineGen = for {
-    st <- stationGen
-    tenths <- Gen.chooseNum(-9999, 9999)
-  } yield (st, tenths.toLong)
+  import BrcSourcePropertySpec._
 
   test("property: any content x any split size -> exact row multiset") {
-    val rnd = new scala.util.Random(7)
     for (trial <- 0 until 6) {
-      val n = 50 + rnd.nextInt(400)
-      val seed = org.scalacheck.rng.Seed(trial * 977L + 13)
-      val rows = Gen.listOfN(n, lineGen).apply(Gen.Parameters.default, seed).get
+      val (rows, text) = corpus(trial)
       val sep = if (trial % 3 == 2) "\r\n" else "\n"
-      val trailing = if (trial % 2 == 0) sep else "" // with/without final EOL
-      val text = rows.map { case (st, t) =>
-        val a = math.abs(t)
-        s"$st;${if (t < 0) "-" else ""}${a / 10}.${a % 10}"
-      }.mkString(sep) + trailing
+      val n = rows.length
       val f = tempFile("brcprop", ".csv")
       java.nio.file.Files.write(f, text.getBytes("UTF-8"))
       val fileLen = java.nio.file.Files.size(f)
@@ -81,5 +68,30 @@ class BrcSourcePropertySpec extends SparkSpec {
       spark.sql("DROP VIEW IF EXISTS brc_ddl")
       java.nio.file.Files.delete(f)
     }
+  }
+}
+
+object BrcSourcePropertySpec {
+  private val stationGen = Gen.oneOf(
+    "Oslo", "Zürich", "St. John's", "Washington, D.C.", "Abéché", "A")
+  private val lineGen = for {
+    st <- stationGen
+    tenths <- Gen.chooseNum(-9999, 9999)
+  } yield (st, tenths.toLong)
+
+  /** Trial `trial`'s (station, tenths) rows and their text: 50-449 lines,
+    * CRLF on every third trial, a final line break on every other. */
+  def corpus(trial: Int): (List[(String, Long)], String) = {
+    val rnd = new scala.util.Random(7)
+    val n = 50 + (0 to trial).map(_ => rnd.nextInt(400)).last
+    val seed = org.scalacheck.rng.Seed(trial * 977L + 13)
+    val rows = Gen.listOfN(n, lineGen).apply(Gen.Parameters.default, seed).get
+    val sep = if (trial % 3 == 2) "\r\n" else "\n"
+    val trailing = if (trial % 2 == 0) sep else "" // with/without final EOL
+    val text = rows.map { case (st, t) =>
+      val a = math.abs(t)
+      s"$st;${if (t < 0) "-" else ""}${a / 10}.${a % 10}"
+    }.mkString(sep) + trailing
+    (rows, text)
   }
 }
