@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   *
   *   sbt "runMain graft.onebrc.BrcScale 1000000000 /tmp/brc"
   *
-  * Generates measurements with the seeded generator, writes the
-  * reference's text format and Parquet (the format a 100 TB deployment
-  * would actually use), then times the flagship query on four paths —
+  * Generates measurements with the seeded generator once, into Parquet
+  * (the format a 100 TB deployment would actually use), derives the
+  * reference's text format and integer-tenths Parquet from that copy, then
+  * times the flagship query on four paths —
   * the CSV datasource, the `brc` DataSource V2 connector, parquet and
   * integer-tenths parquet — twice each (cold + warm), printing one JSON
   * line per measurement and one `{"check":"<path>-vs-csv",...}` line per
@@ -29,29 +30,33 @@ object BrcScale {
     def report(phase: String, sec: Double): Unit =
       println(f"""{"phase":"$phase","sec":$sec%.2f,"rows":$rows,"mrows_per_s":${rows / sec / 1e6}%.1f}""")
 
+    // fixed-point deployment layout: measurements stored as integer
+    // tenths (the reference's own internal representation,
+    // rust_1brc/src/thebracket.rs:46-71, lifted into the SCHEMA) — the
+    // scan then decodes plain longs and the whole query is integer-only
+    def writeTenths(): Unit =
+      spark.read.parquet(s"$dir/parquet")
+        .select(col("station"), round(col("measure") * 10).cast("long").as("t"))
+        .write.mode("overwrite").parquet(s"$dir/parquet_tenths")
+
     val skipGen = args.contains("--skip-gen")
     if (!skipGen) {
-      val gen = OneBrc.generate(spark, rows)
-        // enough splits for dynamic balance
-        .repartition(graft.GraftSession.cpus * 4)
+      // one generator pass: parquet from the generator, the text and
+      // tenths copies read back from it
+      val (_, tPq) = timed {
+        OneBrc.generate(spark, rows)
+          // enough splits for dynamic balance
+          .repartition(graft.GraftSession.cpus * 4)
+          .write.mode("overwrite").parquet(s"$dir/parquet")
+      }
+      report("generate_write_parquet", tPq)
       val (_, tCsv) = timed {
-        gen.write.mode("overwrite").option("sep", ";").option("header", "false")
+        spark.read.parquet(s"$dir/parquet")
+          .write.mode("overwrite").option("sep", ";").option("header", "false")
           .csv(s"$dir/csv")
       }
       report("generate_write_csv", tCsv)
-      val (_, tPq) = timed {
-        gen.write.mode("overwrite").parquet(s"$dir/parquet")
-      }
-      report("generate_write_parquet", tPq)
-      // fixed-point deployment layout: measurements stored as integer
-      // tenths (the reference's own internal representation,
-      // rust_1brc/src/thebracket.rs:46-71, lifted into the SCHEMA) — the
-      // scan then decodes plain longs and the whole query is integer-only
-      val (_, tPqT) = timed {
-        gen.select(col("station"),
-          round(col("measure") * 10).cast("long").as("t"))
-          .write.mode("overwrite").parquet(s"$dir/parquet_tenths")
-      }
+      val (_, tPqT) = timed(writeTenths())
       report("generate_write_parquet_tenths", tPqT)
     }
     // --skip-gen on a data dir written before the tenths layout existed:
@@ -59,11 +64,7 @@ object BrcScale {
     // crashing mid-run after the earlier passes have already spent minutes
     if (skipGen &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/parquet_tenths"))) {
-      val (_, tBf) = timed {
-        spark.read.parquet(s"$dir/parquet")
-          .select(col("station"), round(col("measure") * 10).cast("long").as("t"))
-          .write.mode("overwrite").parquet(s"$dir/parquet_tenths")
-      }
+      val (_, tBf) = timed(writeTenths())
       report("backfill_parquet_tenths", tBf)
     }
 

@@ -49,10 +49,14 @@ object OneBrc {
     * no Hadoop Text, no per-line UTF8String, rows reused. Malformed lines
     * are hard errors, like readMeasurements' FAILFAST. Emits (station,
     * t tenths); feed brcAggTenths. */
+  def readMeasurementsV2(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("graft.sources.BrcDataSource").load(path)
+
+  /** The same scan with at most `splitBytes` bytes per task. */
   def readMeasurementsV2(spark: SparkSession, path: String,
-      splitBytes: Long = 128L * 1024 * 1024): DataFrame =
+      splitBytes: Long): DataFrame =
     spark.read.format("graft.sources.BrcDataSource")
-      .option("brc.split.bytes", splitBytes.toString)
+      .option("brc.split.bytes", splitBytes)
       .load(path)
 
   /** Final projection from tenths partials (station, minT, maxT, sumT,

@@ -30,12 +30,21 @@ import graft.functions.BrcParse
   * writes the measure as a primitive long (integer tenths, R4/R5
   * semantics) into a reused mutable row — nothing else.
   *
-  * Split semantics are the standard chunk-aligned contract (identical to
+  * Ranges: the scan cuts the concatenated input files into byte-balanced
+  * ranges, one task each (the reference's `size / NUM_CPUS` chunks,
+  * thebracket.rs:121-131). The range size is
+  * `min(brc.split.bytes, max(floor, ceil(total / par)))`, where `par` is
+  * `spark.sql.leafNodeDefaultParallelism` (else the context's default
+  * parallelism), `floor` is `spark.sql.files.openCostInBytes`, and
+  * "brc.split.bytes" (128 MiB by default) is the most bytes one task
+  * reads. A range that crosses a file boundary is one segment per file.
+  *
+  * Segment semantics are the standard chunk-aligned contract (identical to
   * LineRecordReader, and to the reference's CHUNK boundary rule at
-  * rust_1brc/src/main.rs:177-186): a split owns every line that STARTS in
-  * (start, end] — plus offset 0 for the first split — because a split
+  * rust_1brc/src/main.rs:177-186): a segment owns every line that STARTS
+  * in (start, end] — plus offset 0 of its file — because a segment
   * starting at `start > 0` unconditionally skips forward past its first
-  * '\n'. Splits default to 128 MiB ("brc.split.bytes").
+  * '\n'.
   *
   * Usage: `spark.read.format("brc").load(paths...)` → schema
   * `(station STRING, t LONG)`. Malformed measures are hard errors
@@ -45,7 +54,7 @@ import graft.functions.BrcParse
   *
   * Pushed aggregate: for `GROUP BY station` over MIN, MAX, SUM and COUNT
   * of `t` (no DISTINCT) or COUNT(*) — `OneBrc.tenthsPartials` — the scan
-  * folds each split into one row per station ([[BrcFoldReader]], the
+  * folds each range into one row per station ([[BrcFoldReader]], the
   * reference's per-chunk station table) and Spark keeps the final merge.
   * Anything else, or a filter left above the scan, keeps row output.
   */
@@ -69,8 +78,9 @@ class BrcDataSource extends TableProvider
       "brc source requires at least one path: spark.read.format(\"brc\").load(path, ...)")
     // option names are case-insensitive, like every built-in source
     val opts = new CaseInsensitiveStringMap(properties)
-    new BrcTable(paths,
-      opts.getLong("brc.split.bytes", 128L * 1024 * 1024))
+    val splitBytes = opts.getLong("brc.split.bytes", 128L * 1024 * 1024)
+    require(splitBytes > 0, s"brc.split.bytes must be positive, got $splitBytes")
+    new BrcTable(paths, splitBytes)
   }
 }
 
@@ -161,8 +171,15 @@ class BrcTable(paths: Seq[String], splitBytes: Long)
     // fs.defaultFS) here, while that session is active on this thread —
     // resolving SparkSession.active later, at plan/execute time, can pick a
     // different session's conf (or none) in multi-session apps
+    val session = org.apache.spark.sql.SparkSession.active
     val sconf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+      session.sessionState.newHadoopConf())
+    // the numbers Spark's own file sources split by
+    val sql = session.sessionState.conf
+    val par = sql.getConf(
+      org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+      .getOrElse(session.sparkContext.defaultParallelism)
+    val floor = sql.filesOpenCostInBytes
     new ScanBuilder with SupportsPushDownRequiredColumns
         with SupportsPushDownAggregates {
       private var pruned = BrcDataSource.schema
@@ -183,7 +200,7 @@ class BrcTable(paths: Seq[String], splitBytes: Long)
         pushed.isDefined
       }
       override def build(): Scan =
-        new BrcScanV2(paths, splitBytes, pruned, pushed, sconf)
+        new BrcScanV2(paths, splitBytes, par, floor, pruned, pushed, sconf)
     }
   }
 }
@@ -286,10 +303,10 @@ class BrcDataWriter(path: String,
 }
 
 /** The `brc` scan: one row per line of `pruned`, or with a pushed
-  * aggregate `agg` one row per station and split (`station`, then one
+  * aggregate `agg` one row per station and range (`station`, then one
   * LONG per aggregate). */
-class BrcScanV2(paths: Seq[String], splitBytes: Long, pruned: StructType,
-    agg: Option[Aggregation],
+class BrcScanV2(paths: Seq[String], splitBytes: Long, par: Int, floor: Long,
+    pruned: StructType, agg: Option[Aggregation],
     sconf: org.apache.spark.util.SerializableConfiguration)
   extends Scan with Batch {
   private val kinds = agg.flatMap(BrcDataSource.foldKinds)
@@ -305,7 +322,8 @@ class BrcScanV2(paths: Seq[String], splitBytes: Long, pruned: StructType,
         .mkString("PushedAggregation: [", ", ", "] PushedGroupBy: [station]")
     }
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** Every input file, in order. */
+  private def inputFiles(): Seq[FileStatus] = {
     val conf = sconf.value
     paths.flatMap { path =>
       val p = new Path(path)
@@ -329,12 +347,31 @@ class BrcScanV2(paths: Seq[String], splitBytes: Long, pruned: StructType,
         .filterNot(s => isGlob &&
           (s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith(".")))
       val roots = if (matched.nonEmpty) matched else Seq(fs.getFileStatus(p))
-      roots.flatMap(files).flatMap { st =>
-        (0L until st.getLen by splitBytes).map { off =>
-          BrcInputPartition(st.getPath.toString, off,
-            math.min(off + splitBytes, st.getLen))
-        }
-      }
+      roots.flatMap(files)
+    }
+  }
+
+  /** Byte-balanced ranges over the concatenated files (sizes differ by at
+    * most one byte), each a list of per-file segments. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val inputs = inputFiles().filter(_.getLen > 0)
+    val total = inputs.map(_.getLen).sum
+    if (total == 0) return Array.empty
+    def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
+    // never more ranges than bytes: splitBytes > 0 and floor >= 1
+    val n = math.max(ceilDiv(total, splitBytes),
+      math.min(par.toLong, ceilDiv(total, math.max(floor, 1L))))
+    // range i starts at i * q + min(i, r): the first r ranges get one more byte
+    val (q, r) = (total / n, total % n)
+    def at(i: Long): Long = i * q + math.min(i, r)
+    val offsets = inputs.scanLeft(0L)(_ + _.getLen)
+    (0L until n).map { i =>
+      val (a, b) = (at(i), at(i + 1))
+      BrcInputPartition(inputs.zip(offsets).collect {
+        case (st, off) if off < b && off + st.getLen > a =>
+          BrcSegment(st.getPath.toString, math.max(a - off, 0L),
+            math.min(b - off, st.getLen))
+      })
     }.toArray
   }
 
@@ -354,15 +391,23 @@ class BrcScanV2(paths: Seq[String], splitBytes: Long, pruned: StructType,
   }
 }
 
-case class BrcInputPartition(path: String, start: Long, end: Long)
-  extends InputPartition
+/** One file's bytes [start, end) of a range. */
+case class BrcSegment(path: String, start: Long, end: Long)
 
-/** One pass over [start, end): reused 4 MiB buffer, reused mutable row.
+/** One task's range: its segments, in file order. */
+case class BrcInputPartition(segments: Seq[BrcSegment]) extends InputPartition
+
+/** One pass over a range's segments, one after another, through one
+  * 4 MiB buffer and one reused mutable row.
   * Lines span buffer refills via compaction (the tail fragment is moved to
   * the buffer head before the next read — the CHUNK_EXCESS carry-over,
   * rust_1brc/src/main.rs:22-25, without the bounded-line-length bet).
   * With a `fold` sink each line goes to [[BrcFoldReader.add]] instead of
-  * the row. */
+  * the row, and one `next()` folds the whole range. Keeping the line
+  * loop inside `next()` matters on a cold JVM: with a call per line, the
+  * first segment to end mid-file deoptimized `next()` late in the job,
+  * and the other tasks' compiled drain loops kept calling it in the
+  * interpreter (1e7 rows after a CSV pass: 2.8–7.5 s instead of 1.6 s). */
 class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
     sconf: org.apache.spark.util.SerializableConfiguration,
     fold: BrcFoldReader = null)
@@ -374,23 +419,32 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
   private val stationOrd = fields.indexOf("station")
   private val tOrd = fields.indexOf("t")
 
-  private val in = {
-    val hp = new Path(p.path)
-    val stream = hp.getFileSystem(sconf.value).open(hp)
-    stream.seek(p.start)
-    stream
-  }
+  private val segments = p.segments.iterator
+  private var seg: BrcSegment = null
+  private var in: org.apache.hadoop.fs.FSDataInputStream = null
   private val buf = new Array[Byte](4 * 1024 * 1024)
   private var limit = 0           // valid bytes in buf
   private var pos = 0             // cursor within buf
-  private var filePos = p.start   // file offset of buf(0)
-  private var exhausted = false
+  private var filePos = 0L        // file offset of buf(0)
+  private var exhausted = true    // the open segment's file is read out
   private val row = new SpecificInternalRow(
     StructType(fields.map(BrcDataSource.schema(_))))
 
-  // a split starting mid-file begins at the first line AFTER the next '\n'
-  // (that partial line belongs to the previous split)
-  if (p.start > 0) { fill(); skipPastNewline() }
+  /** Open the range's next segment. @return false when none is left */
+  private def nextSegment(): Boolean = {
+    close()
+    in = null
+    if (!segments.hasNext) return false
+    seg = segments.next()
+    val hp = new Path(seg.path)
+    in = hp.getFileSystem(sconf.value).open(hp)
+    in.seek(seg.start)
+    limit = 0; pos = 0; filePos = seg.start; exhausted = false
+    // a segment starting mid-file begins at the first line AFTER the next
+    // '\n' (that partial line belongs to the previous range)
+    if (seg.start > 0) { fill(); skipPastNewline() }
+    true
+  }
 
   /** refill buf, compacting [pos, limit) to the front. @return got bytes */
   private def fill(): Boolean = {
@@ -418,24 +472,23 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
 
   override def next(): Boolean = {
     // own lines that START in (start, end] — a line starting exactly at
-    // `end` is ours, because the next split (seeking to `end` mid-line or
+    // `end` is ours, because the next range (seeking to `end` mid-line or
     // at its start) unconditionally skips past its first '\n'
     while (true) {
-      if (filePos + pos > p.end || exhausted) return false
+      while (exhausted || filePos + pos > seg.end)
+        if (!nextSegment()) return false
       // find the line terminator; refill (compacting) if it's cut off
       var nl = pos
       while (nl < limit && buf(nl) != '\n') nl += 1
       if (nl >= limit) {
         val before = limit - pos
-        if (!fill()) {
-          if (limit == pos) return false
-          nl = limit // final line without trailing newline
-        } else {
+        if (!fill()) nl = limit // end of file, nothing left (pos == limit)
+        else {
           nl = before // resume scan after compaction (pos is now 0)
           while (nl < limit && buf(nl) != '\n') nl += 1
           if (nl >= limit && limit == buf.length)
             throw new IllegalStateException(
-              s"line longer than ${buf.length} bytes in ${p.path}")
+              s"line longer than ${buf.length} bytes in ${seg.path}")
         }
       }
       val lineStart = pos
@@ -464,25 +517,25 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
               java.util.Arrays.copyOfRange(buf, lineStart, sep)))
           }
         }
-        return true
+        if (fold == null) return true
       }
-      // empty line: loop to the next one
+      // a folded or empty line, or the end of the file: loop on
     }
     false
   }
 
   override def get(): InternalRow = row
-  override def close(): Unit = in.close()
+  override def close(): Unit = if (in != null) in.close()
 }
 
-/** The pushed partial aggregate of one split (R4/R5's per-chunk station
+/** The pushed partial aggregate of one range (R4/R5's per-chunk station
   * table, PAPER.md §0). [[BrcPartitionReader]]'s line walk hands every
-  * line to [[add]], which folds it into an open-addressing table keyed on
-  * the station bytes (413 keys in the 1BRC data, at most 10,000 by its
-  * spec). Once the walk is drained, the reader emits one row per station:
-  * `station`, then one LONG per pushed aggregate, in pushed order. The
-  * sum uses `Math.addExact`, so overflow throws as Spark's ANSI `Sum`
-  * does. */
+  * line of every segment to [[add]], which folds it into an
+  * open-addressing table keyed on the station bytes (413 keys in the 1BRC
+  * data, at most 10,000 by its spec). Once the walk is drained, the
+  * reader emits one row per station: `station`, then one LONG per pushed
+  * aggregate, in pushed order. The sum uses `Math.addExact`, so overflow
+  * throws as Spark's ANSI `Sum` does. */
 class BrcFoldReader(p: BrcInputPartition, kinds: Array[Int],
     sconf: org.apache.spark.util.SerializableConfiguration)
   extends PartitionReader[InternalRow] {
@@ -548,7 +601,7 @@ class BrcFoldReader(p: BrcInputPartition, kinds: Array[Int],
   }
 
   override def next(): Boolean = {
-    if (!drained) { while (walk.next()) {}; drained = true }
+    if (!drained) { walk.next(); drained = true } // folds the whole range
     slot += 1
     while (slot < keys.length && keys(slot) == null) slot += 1
     slot < keys.length

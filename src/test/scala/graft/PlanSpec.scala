@@ -88,6 +88,13 @@ class PlanSpec extends SparkSpec {
       "PushedAggregation: [MIN(t), SUM(t), COUNT(*), MAX(t)] PushedGroupBy: [station]"),
       s"the brc scan must fold the partials:\n$p")
     assert(!p.contains("rangepartitioning"), s"no range exchange:\n$p")
+    // the golden file is under spark.sql.files.openCostInBytes: one task
+    val tasks = SparkEntry.queries("q19_scan_dsv2")(spark, sf0001)
+      .queryExecution.sparkPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.inputPartitions.length
+      }
+    assert(tasks == Seq(1), s"q19 scans its golden file in one task: $tasks")
   }
 
   test("q45: SQL-text predicates reach the parquet scan") {
