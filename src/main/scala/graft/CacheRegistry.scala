@@ -67,8 +67,8 @@ object CacheRegistry {
   def release(s: SparkSession): Unit =
     registry.remove(s).foreach(_.foreach(_.unpersist()))
 
-  /** Number of frames currently registered for `s` (spec probe). */
-  def size(s: SparkSession): Int = registry.get(s).map(_.size).getOrElse(0)
+  /** Frames currently registered for `s` (spec probe). */
+  def frames(s: SparkSession): List[DataFrame] = registry.getOrElse(s, Nil)
 
   /** Materialized storage (memory + disk bytes) of every persisted RDD in
     * `s`'s block manager — registered frames, iteration checkpoints and

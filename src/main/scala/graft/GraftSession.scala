@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session every main runs on: `local[cpus]` with one shuffle
-  * partition per core, UTC session time, no UI, ERROR logging. AQE is
-  * Spark's default (on) and is not restated. A main that needs a
-  * different partition count sets it on the returned session.
+  * partition per core, UTC session time, no UI, ERROR logging, and the
+  * graft function catalog installed. AQE is Spark's default (on) and is
+  * not restated. A main that needs a different partition count sets it
+  * on the returned session.
   */
 object GraftSession {
 
@@ -21,6 +22,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    GraftExtensions.install(spark)
     spark
   }
 }

@@ -15,9 +15,11 @@ object SparkEntry {
     onebrc.OneBrc.brcAgg(
       onebrc.OneBrc.stationsFromEvents(spark, "/root/testdata/sf0.001"))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * installs the graft function catalog on the session it is given, so
+    * a caller's own session needs no setup. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    onebrc.OneBrc.queries ++
+    (onebrc.OneBrc.queries ++
       operators.Relational.queries ++
       operators.SqlEntry.queries ++
       operators.Dedup.queries ++
@@ -33,7 +35,9 @@ object SparkEntry {
       sources.BucketedStage.queries ++
       sources.CompactionStage.queries ++
       sources.SchemaEvolutionStage.queries ++
-      streaming.Streaming.queries
+      streaming.Streaming.queries).map { case (name, q) =>
+        name -> ((s: SparkSession, d: String) => { GraftExtensions.install(s); q(s, d) })
+      }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys => rows-only check. */

@@ -47,10 +47,7 @@ object Staging {
       case None =>
         val r = java.nio.file.Files.createTempDirectory("graft-stage-")
         sys.addShutdownHook {
-          def del(p: java.io.File): Unit = {
-            Option(p.listFiles).foreach(_.foreach(del)); p.delete(); ()
-          }
-          del(r.toFile)
+          org.apache.commons.io.FileUtils.deleteQuietly(r.toFile); ()
         }
         r
     }

@@ -81,12 +81,15 @@ object Tables {
     * threshold, legacy flags) — a query run in such a clone would diverge
     * from every batch query on the caller's session. Static confs can't
     * be re-set on a live session and are skipped (they're shared through
-    * the SparkContext anyway). */
+    * the SparkContext anyway). `newSession()` also starts from the
+    * built-in and extension functions only, so the clone gets the graft
+    * function catalog installed. */
   def sessionClone(base: SparkSession): SparkSession = {
     val s2 = base.newSession()
     base.conf.getAll.foreach { case (k, v) =>
       try s2.conf.set(k, v) catch { case _: Exception => () }
     }
+    GraftExtensions.install(s2)
     s2
   }
 

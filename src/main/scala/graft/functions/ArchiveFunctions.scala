@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -460,18 +459,4 @@ case class WarcRecordsExpr(child: Expression) extends UnaryExpression {
     })
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object ArchiveFunctions {
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction(
-      "tar_entries", exprs => TarEntriesExpr(exprs.head), "built-in")
-    r.createOrReplaceTempFunction(
-      "zip_entries", exprs => ZipEntriesExpr(exprs.head), "built-in")
-    r.createOrReplaceTempFunction(
-      "gzip_members", exprs => GzipMembersExpr(exprs.head), "built-in")
-    r.createOrReplaceTempFunction(
-      "warc_records", exprs => WarcRecordsExpr(exprs.head), "built-in")
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -83,8 +82,4 @@ case class BrcStatsAgg(child: Expression,
 object BrcStatsAgg {
   /** Records{count,min,max,sum} (rust_1brc/src/main.rs:29-35), cents. */
   final class Buf(var count: Long, var minC: Long, var maxC: Long, var sumC: Long)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("brc_stats",
-      exprs => BrcStatsAgg(exprs.head), "built-in")
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -138,8 +137,4 @@ object FreqSketchAgg {
       dead.foreach(counters.remove)
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_sketch", exprs => FreqSketchAgg(exprs.head), "built-in")
 }

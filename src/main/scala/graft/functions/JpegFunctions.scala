@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
@@ -344,21 +343,4 @@ case class JpegProgRgbExpr(child: Expression) extends DecodeExpr(
   def decode(b: Array[Byte]): Any = JpegCodec.progRgb(b)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
-}
-
-object JpegFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_info", exprs => JpegInfoExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_pixels", exprs => JpegPixelsExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_exif", exprs => JpegExifExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_rgb", exprs => JpegRgbExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_prog_pixels", exprs => JpegProgExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_prog_rgb", exprs => JpegProgRgbExpr(exprs.head), "built-in")
-  }
 }

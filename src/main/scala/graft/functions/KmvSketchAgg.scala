@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -125,8 +124,4 @@ object KmvSketchAgg {
     while (i < 6) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
     h
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch", exprs => KmvSketchAgg(exprs.head), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -203,19 +202,4 @@ case class PngBox2(child: Expression) extends DecodeExpr("png_box2",
   def decode(b: Array[Byte]): Any = PngHeader.box2Stats(b)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
-}
-
-object PngFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "png_ihdr", exprs => PngIhdr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "png_pixels", exprs => PngPixels(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "png_ahash", exprs => PngAhash(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "png_box2", exprs => PngBox2(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "png_full", exprs => PngFullExpr(exprs.head), "built-in")
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
@@ -148,8 +147,4 @@ object TopKRowsAgg {
       }
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_rows", exprs => TopKRowsAgg(exprs(0), exprs(1)), "built-in")
 }

@@ -265,34 +265,6 @@ case class NfcNormalize(child: Expression)
 }
 
 object VectorExpressions {
-  /** Register the expressions in the session's function registry so they
-    * are usable from SQL and via expr("...") — idempotent per session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      exprs => CosineSimilarity(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("rolling_hash",
-      exprs => RollingHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      exprs => NfcNormalize(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("rolling_window_hashes",
-      exprs => rollingWindowHashesBuilder(exprs), "built-in")
-  }
-
-  /** Builder shared with GraftExtensions' config-only injection. */
-  def rollingWindowHashesBuilder(exprs: Seq[Expression]): Expression =
-    RollingWindowHashes(exprs.head, litInt(exprs(1)))
-
-  /** The window length binds into the generated code, so it must be a
-    * literal int (same restriction Spark's own array functions place on
-    * e.g. array_repeat counts used in codegen constants). */
-  private def litInt(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-      org.apache.spark.sql.types.IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"rolling_window_hashes window length must be an int literal, got $other")
-  }
-
   /** Register lsh_bands bound to a concrete hyperplane matrix. */
   def registerLsh(spark: SparkSession, planes: Array[Double],
       nBands: Int, bitsPerBand: Int): Unit =

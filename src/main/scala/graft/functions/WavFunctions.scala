@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -8,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
 /** RIFF/WAVE header decode for q146 — the audio leg of the real-bytes
-  * multimodal ingest story (PngFunctions is the image leg). Unlike PNG's
+  * multimodal ingest story (the PNG decoders are the image leg). Unlike PNG's
   * fixed-position IHDR, WAV metadata lives in a CHUNK LIST (`fmt ` and
   * `data` chunks after the 12-byte RIFF/WAVE preamble, each 8-byte
   * tagged+sized, word-aligned), so the decoder walks the list rather than
@@ -259,18 +258,4 @@ case class WavSamples(child: Expression, n: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object WavFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wav_fmt", exprs => WavFmt(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wav_pcm", exprs => WavPcmStats(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wav_fingerprint", exprs => WavFingerprint(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wav_samples", exprs => WavSamples(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-  }
 }

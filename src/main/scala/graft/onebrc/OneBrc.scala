@@ -260,7 +260,6 @@ object OneBrc {
     "q18_custom_agg" -> ((s, d) => {
       // the reference's Records struct as a native SQL aggregate
       // (TypedImperativeAggregate, graft.functions.BrcStatsAgg)
-      graft.functions.BrcStatsAgg.register(s)
       stationsFromEvents(s, d)
         .groupBy(col("station"))
         .agg(expr("brc_stats(measure)").as("st"))

@@ -72,7 +72,6 @@ object ArchiveScale {
     val skipGen = args.contains("--skip-gen")
     val spark = graft.GraftSession()
     spark.conf.set("spark.sql.shuffle.partitions", "64")
-    graft.functions.ArchiveFunctions.register(spark)
 
     def timed[T](phase: String)(body: => T): T = {
       val t0 = System.nanoTime()

@@ -432,7 +432,6 @@ object Dedup {
     * (df-count/canonical build side + join-back probe side). `pos` is
     * 1-based to match the oracle's `range(1, …)` spelling. */
   private def rollingWindows(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     graft.CacheRegistry.cached(t(s, d, "documents")
       .filter(size(split(col("text"), " ")) >= SpanWin)
       .select(col("doc_id"),
@@ -719,7 +718,6 @@ object Dedup {
     * url_canon, domain) — q205 canonicalizes once and feeds both the
     * blocklist and this dedup from the same cached frame. */
   def urlDedupCappedFromCanon(s: SparkSession, canon: DataFrame): DataFrame = {
-    graft.functions.TopKRowsAgg.register(s)
     val keepers = canon
       .groupBy(col("url_canon"), col("domain"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_dups"))
@@ -1006,7 +1004,6 @@ object Dedup {
       // without NFC they hash to different fingerprints and dedup misses
       // them. A decomposed prefix is injected to prove the normalization
       // actually fires (the corpus itself is ASCII).
-      graft.functions.VectorExpressions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), // "Zu" + U+0308 combining diaeresis + "rich"
           concat(lit("Zu\u0308rich "), col("text")).as("raw"))
@@ -1516,12 +1513,11 @@ object Dedup {
       // table (O(corpus tokens) rows) just to discard ~all of them. Here
       // a ~1 MB bloom bitset over the eval grams is built once (scalar
       // subquery; Spark's own BloomFilterAggregate, registered as SQL by
-      // BloomFunctions), evaluated MAP-SIDE on the train gram scan — only
+      // the GraftExtensions catalog), evaluated MAP-SIDE on the train gram scan — only
       // might-match rows (true hits + the bounded false-positive sliver)
       // ever reach the exact join that removes FPs. Same rows as q79 by
       // construction (bloom has no false negatives; the exact join keeps
       // correctness), so it shares q79's oracle verbatim.
-      graft.functions.BloomFunctions.register(s)
       val g = grams(s, d, DecontamGramLen)
       g.filter(col("source").isin(EvalSources: _*))
         .select(col("s"), col("doc_id").as("eval_doc"))

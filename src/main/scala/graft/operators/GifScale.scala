@@ -248,7 +248,6 @@ object GifScale {
     }
     val (expOk, expSum, expSq, expClears) = exp
 
-    graft.functions.GifFunctions.register(spark)
     val decoded = graft.CacheRegistry.cached(spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.gif").load(work)
       .select(element_at(split(col("path"), "/"), -1).as("name"),

@@ -468,7 +468,6 @@ object JpegScale {
     }
     val (expOk, expScan, expSum, expSq) = exp
 
-    graft.functions.JpegFunctions.register(spark)
     // BOTH entropy decoders run per file; exactly one may land (the
     // q316/q326 profile split) — `both` counts any file that decoded
     // under the wrong layer too, and must stay zero

@@ -59,7 +59,6 @@ object Multimodal {
       // = the generator's INDEPENDENT 512-block walk, itself
       // cross-checked against Python tarfile's listing
       // (tools/gen_archive_fixtures.py).
-      graft.functions.ArchiveFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.tar")
         .load(graft.Fixtures.path("tar"))
@@ -85,7 +84,6 @@ object Multimodal {
       // byte surfaces as crc_ok = false with the md5 OF THE CORRUPTED
       // BYTES, exactly what a quarantine stage needs. Oracle = the
       // generator's independent EOCD/CD/local struct walk.
-      graft.functions.ArchiveFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.zip")
         .load(graft.Fixtures.path("zip"))
@@ -114,7 +112,6 @@ object Multimodal {
       // clean text is planted ground truth (the generator ASSERTS its
       // independent Python cleaner inverts the builder's encoding
       // exactly).
-      graft.functions.ArchiveFunctions.register(s)
       val clean = TextAnalysis.htmlCleanOf(col("r.body"))
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.warc")
@@ -146,7 +143,6 @@ object Multimodal {
       // reproduces crawl.warc byte-for-byte, so THIS query's members
       // and q285's records certify each other. Oracle = the generator's
       // independent member walk.
-      graft.functions.ArchiveFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.warc.gz")
         .load(graft.Fixtures.path("warc"))
@@ -172,7 +168,6 @@ object Multimodal {
       // every fixture). The fixture set plants ASCII, 2/3/4-byte
       // sequences, stray continuation/lead bytes, latin-1-as-utf8 and
       // a truncated sequence at EOF.
-      graft.functions.Utf8Functions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
         .load(graft.Fixtures.path("utf8"))
@@ -197,7 +192,6 @@ object Multimodal {
       // independent Python walk + mimic cleaner over the SAME planted
       // texts the per-record q285 manifest certifies — so the two
       // queries pin each other's decode at different granularities.
-      graft.functions.ArchiveFunctions.register(s)
       val recs = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.warc")
         .load(graft.Fixtures.path("warc"))
@@ -313,7 +307,6 @@ object Multimodal {
       // provably equal at this threshold, which is exactly the
       // contract the banding claims. Payload bytes never shuffle: 8
       // bytes of hash per image cross the exchange.
-      graft.functions.PngFunctions.register(s)
       val hashed = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
         .load(graft.Fixtures.path("png_dedup"))
@@ -347,7 +340,6 @@ object Multimodal {
       // generator asserts the planted structure). Candidates via the
       // same 4×16-bit banding, recall guaranteed for hamming ≤ 3 by
       // pigeonhole; 8 bytes per clip cross the shuffle, never audio.
-      graft.functions.WavFunctions.register(s)
       val hashed = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.wav")
         .load(graft.Fixtures.path("wav_dedup"))
@@ -383,7 +375,6 @@ object Multimodal {
       // timestamps — the schema/partitioning a production extractor
       // hands its (stubbed-here) codec call, per the SURVEY multimodal
       // stance. Payloads never shuffle; ~40 bytes of plan per sample.
-      graft.functions.AviFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.avi")
         .load(graft.Fixtures.path("avi"))
@@ -423,7 +414,6 @@ object Multimodal {
       // answers are provably equal at this threshold — exactly the
       // claim the banding makes at corpus scale, where the join meets
       // only same-(frame, band) pairs, never all clip pairs.
-      graft.functions.AviFunctions.register(s)
       val hashed = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.avi")
         .load(graft.Fixtures.path("avi_dedup"))
@@ -484,7 +474,6 @@ object Multimodal {
       // ~8 bytes/frame cross the shuffle, candidates only from shared
       // band buckets, exact verify only on candidates — never all clip
       // pairs, never payloads.
-      graft.functions.AviFunctions.register(s)
       val el = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.avi")
         .load(graft.Fixtures.path("avi_dedup"))
@@ -542,7 +531,6 @@ object Multimodal {
       // Python parser and this decoder must all agree. At 100 TB the
       // decode runs inside the scan projection: ~100 bytes of
       // counts/digest per document cross the shuffle, never the PDF.
-      graft.functions.PdfFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.pdf")
         .load(graft.Fixtures.path("pdf"))
@@ -581,7 +569,6 @@ object Multimodal {
       // walk runs inside the scan projection over binaryFile: ~100
       // bytes of dimensions/counts/CRCs per image cross the shuffle,
       // never pixels.
-      graft.functions.JpegFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.jpg")
         .load(graft.Fixtures.path("jpeg"))
@@ -618,7 +605,6 @@ object Multimodal {
       // Oracle = the generator's builder-intent manifest
       // (manifest_exif.csv). At 100 TB: same scan-projection shape as
       // q315 — a per-row bounded walk, ~50 bytes out per image.
-      graft.functions.JpegFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.jpg")
         .load(graft.Fixtures.path("jpeg"))
@@ -646,7 +632,6 @@ object Multimodal {
       // swap — orientation 1 semantics). Oracle = the two builder
       // manifests LEFT-joined in SQL, computing the same swap rule from
       // ground truth the decoders never saw.
-      graft.functions.JpegFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.jpg")
         .load(graft.Fixtures.path("jpeg"))
@@ -686,7 +671,6 @@ object Multimodal {
       // (RGB stats + CRC32 over row-major r,g,b bytes — every SUBPIXEL
       // pinned). At 100 TB: decode-at-ingest in the scan projection,
       // ~70 bytes per image across the shuffle.
-      graft.functions.JpegFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.jpg")
         .load(graft.Fixtures.path("jpeg_color"))
@@ -716,7 +700,6 @@ object Multimodal {
       // not just how many. At 100 TB the CRC comes out of the same
       // scan-projection decode as q316 — the dedup groupBy shuffles
       // ~30 bytes per image, never pixels.
-      graft.functions.JpegFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.jpg")
         .load(graft.Fixtures.path("jpeg_decode"))
@@ -746,7 +729,6 @@ object Multimodal {
       // Compositing/disposal is a rendering policy, not a wire format:
       // frames with offsets void (the honest-boundary rule). At
       // 100 TB: in-scan decode, ~70 bytes per FRAME across the shuffle.
-      graft.functions.GifFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.gif")
         .load(graft.Fixtures.path("gif"))
@@ -782,7 +764,6 @@ object Multimodal {
       // overrun, truncated IDAT, surplus scanlines in a valid zlib
       // stream) void. At 100 TB: the in-scan decode shape, ~80 bytes
       // of stats per image across the shuffle.
-      graft.functions.PngFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
         .load(graft.Fixtures.path("png_full"))
@@ -819,7 +800,6 @@ object Multimodal {
       // planted mid-scan truncation voids. Ground truth three ways as
       // the whole family. At 100 TB: same in-scan decode shape, ~70
       // bytes of stats per image across the shuffle.
-      graft.functions.JpegFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.jpg")
         .load(graft.Fixtures.path("jpeg_prog_color"))
@@ -856,7 +836,6 @@ object Multimodal {
       // the generator's manifest (structure cross-checked by its
       // independent LZW re-decoder). At 100 TB: in-scan walk, ~80
       // bytes of structure per image cross the shuffle.
-      graft.functions.GifFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.gif")
         .load(graft.Fixtures.path("gif"))
@@ -895,7 +874,6 @@ object Multimodal {
       // stream round-trips before the manifest is written. At 100 TB:
       // decode-at-ingest inside the scan projection — ~70 bytes of
       // stats per image cross the shuffle, never pixels.
-      graft.functions.GifFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.gif")
         .load(graft.Fixtures.path("gif"))
@@ -936,7 +914,6 @@ object Multimodal {
       // pixel stats + CRC32 come from the shared integer IDCT. At
       // 100 TB: same in-scan decode shape — ~70 bytes of stats per
       // image cross the shuffle, never pixels, never scan scripts.
-      graft.functions.JpegFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.jpg")
         .load(graft.Fixtures.path("jpeg_prog"))
@@ -980,7 +957,6 @@ object Multimodal {
       // pinned, no pixel shuffled. At 100 TB this is the decode-at-
       // ingest shape: entropy decode + IDCT run inside the scan
       // projection; ~70 bytes of stats per image cross the shuffle.
-      graft.functions.JpegFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.jpg")
         .load(graft.Fixtures.path("jpeg_decode"))
@@ -1012,7 +988,6 @@ object Multimodal {
       // payloads stay columnar, header metadata extracts in the scan
       // projection without shuffling a single payload byte; the codec
       // call (q91's mapPartitions stub) remains the only non-real step.
-      graft.functions.PngFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
         .load(graft.Fixtures.path("png"))
@@ -1031,7 +1006,6 @@ object Multimodal {
       // deliberately leads with a junk LIST chunk, so this query fails
       // if the decoder ever regresses to assuming the canonical offset.
       // Oracle = generation manifest (tools/gen_wav_fixtures.py).
-      graft.functions.WavFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.wav")
         .load(graft.Fixtures.path("wav"))
@@ -1063,7 +1037,6 @@ object Multimodal {
       // Paeth; the img_g/img_h fixtures exercise every filter
       // schedule) + the same integer arithmetic, bit-identical (the
       // q262 cross-validation contract).
-      graft.functions.PngFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
         .load(graft.Fixtures.path("png"))
@@ -1101,7 +1074,6 @@ object Multimodal {
       // q156/q207 cross-validation contract); short files (wav_f, 33
       // samples) are null per wav_samples' no-zero-pad contract and
       // skipped by both sides.
-      graft.functions.WavFunctions.register(s)
       def pairA(arr: String, m: Int): String =
         s"transform(sequence(0, ${m - 1}), i -> " +
           s"element_at($arr, 2*i+1) + element_at($arr, 2*i+2))"
@@ -1143,7 +1115,6 @@ object Multimodal {
       // generation manifest's expected stats, computed from the same
       // sample formula the fixture writer used (ground truth by
       // construction — the q144/q146 contract).
-      graft.functions.WavFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.wav")
         .load(graft.Fixtures.path("wav"))
@@ -1170,7 +1141,6 @@ object Multimodal {
       // pixels. Oracle = pixels.csv, the generation manifest's expected
       // stats computed from the same pixel formula the fixture writer
       // used (ground truth by construction — the q144/q156 contract).
-      graft.functions.PngFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
         .load(graft.Fixtures.path("png"))

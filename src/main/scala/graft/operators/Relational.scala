@@ -1615,7 +1615,6 @@ object Relational {
       // O(k) state per group, merge-able partials, ONE pass over the raw
       // rows with no pre-distinct shuffle. Same md5 arithmetic ⇒ the
       // estimate equals q56's and shares its oracle verbatim.
-      graft.functions.KmvSketchAgg.register(s)
       t(s, d, "lineitem")
         // match the shared oracle's group domain: its groups derive from
         // non-NULL keys, so a group holding ONLY null keys must not emit
@@ -2012,7 +2011,6 @@ object Relational {
       // quadratic object). Ties break by zero-padded partner id, the
       // q231 discipline, mirrored exactly in the oracle's window
       // tie-break.
-      graft.functions.TopKRowsAgg.register(s)
       val pr = basketPairs(basketItems(s, d))
       val both = pr.select(col("a").as("item"), col("b").as("rec"),
           expr("(n_ab * 10000) div n_a").as("conf_bp"), col("n_ab"))
@@ -2429,7 +2427,6 @@ object Relational {
       // points (10000 = perfectly uniform); share_bp = the hot key's
       // fraction of all rows. Exact integers throughout — the report a
       // production job would emit before choosing its join strategy.
-      graft.functions.TopKRowsAgg.register(s)
       val cnt = events(s, d).groupBy(col("user_id"))
         .agg(count(lit(1)).as("cnt"))
         .transform(graft.CacheRegistry.cached)
@@ -2493,7 +2490,6 @@ object Relational {
       // serving a classic sampling operator). Weights here are doc
       // lengths; at 100 TB the same one-pass shape holds and the
       // sample is reproducible bit-for-bit under any layout.
-      graft.functions.TopKRowsAgg.register(s)
       val docs = t(s, d, "documents")
         .select(col("doc_id"),
           octet_length(col("text")).cast("long").as("w"))

@@ -81,7 +81,6 @@ object Similarity {
     * carry only ids through the join + dedupe; the 64-float payloads are
     * joined back once per verified candidate. */
   private def lshScoredPairs(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val banded = bandedVectors(s, d)
     val cand = banded.select(col("band"), col("key"), col("vec_id").as("i"))
       .join(banded.select(col("band"), col("key"), col("vec_id").as("j")),
@@ -114,7 +113,6 @@ object Similarity {
     * expected within-cell pair count stays near-linear). */
   private def semAssign(s: SparkSession, d: String, probes: Int,
                         k: Int): DataFrame = {
-    VectorExpressions.register(s)
     val e = t(s, d, "embeddings")
     val seeds = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("k"), col("embedding").as("se"))
@@ -583,7 +581,6 @@ object Similarity {
       // text, the rankers are independent, and the diagnostic reads
       // "maximum diversity: fusion changes everything" — the exact
       // complement of q165's rationale.
-      VectorExpressions.register(s)
       val p = 0.9
       val wTail = (1 to 10).map(m => math.round(
         (m to 10).map(dd => (1 - p) * math.pow(p, dd - 1) / dd).sum * 1e9))
@@ -628,7 +625,6 @@ object Similarity {
       // — broadcast queries, one corpus pass, exact BIGINT dots —
       // and Int8RecallSpec pins the claim: q239's total overlap ≥
       // q238's on the fixture corpus.
-      VectorExpressions.register(s)
       val e = t(s, d, "embeddings")
         .withColumn("nrm", expr(
           "sqrt(aggregate(transform(embedding, x -> CAST(x AS DOUBLE) " +
@@ -686,7 +682,6 @@ object Similarity {
       // bounded per-query windows; the final join of two 10-row-per-
       // query frames is trivial. At 100 TB this harness rides a
       // sampled query set — the corpus side still never shuffles.
-      VectorExpressions.register(s)
       val e = t(s, d, "embeddings")
         .withColumn("amax", expr(
           "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))"))
@@ -798,7 +793,6 @@ object Similarity {
     }),
 
     "q70_knn_brute" -> ((s, d) => {
-      VectorExpressions.register(s)
       val e = t(s, d, "embeddings")
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
@@ -827,7 +821,6 @@ object Similarity {
       // rides the broadcast join, so mining costs exactly one kNN pass — at
       // 100 TB the corpus side never shuffles and the anchor batch scales to
       // thousands of rows before the broadcast stops fitting.
-      VectorExpressions.register(s)
       val e = t(s, d, "embeddings")
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
@@ -930,7 +923,6 @@ object Similarity {
       // assignment shards the index so a query touches 1/k of the vectors.
       // Centroids are cast to float so both engines see identical codebook
       // values (double avg noise is far below float resolution).
-      VectorExpressions.register(s)
       val e = t(s, d, "embeddings")
       val cents = e
         .select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
@@ -1029,7 +1021,6 @@ object Similarity {
       // O(queries × corpus) — the float vectors stay in cold storage and
       // only shortlist rows are ever fetched. ad_rn (the PQ rank) rides
       // along so the output shows the reorder the rerank exists for.
-      VectorExpressions.register(s)
       val Shortlist = 25
       val wShort = Window.partitionBy(col("q_id"))
         .orderBy(col("ad_nano"), col("vec_id"))
@@ -1072,7 +1063,6 @@ object Similarity {
       // vectors make that cosine ordering), ADC is the q35 nano-unit
       // idiom — so shortlist AND result are bit-identical vs the
       // oracle's unrolled SQL.
-      VectorExpressions.register(s)
       val cand = ivfCandidates(s, d)
       val (codes, adc) = pqCodesAndAdc(s, d)
       // ADC restricted to candidates: the join on vec_id fans each
@@ -1098,7 +1088,6 @@ object Similarity {
       // bit-identical to q143 by construction (same assignment, same ADC
       // sums, same rerank) — it shares q143's oracle verbatim, and
       // IvfPqSpec pins the equality plus the staged-serving plan shape.
-      VectorExpressions.register(s)
       val stage = annStageDir(d)
       graft.Staging.once(stage) {
         val (codes, _) = pqCodesAndAdc(s, d)
@@ -1135,7 +1124,6 @@ object Similarity {
       // (-Dgraft.stage.dir) both steps survive JVM restarts via
       // Staging's marker files — the 100 TB contract: an index is built
       // once, maintained by deltas, and outlives every driver.
-      VectorExpressions.register(s)
       annIncBuild(s, d)
       annIncAdmit(s, d)
       // serving = q150's tail: probes and ADC tables are per-QUERY work
@@ -1172,7 +1160,6 @@ object Similarity {
       // leg keeps its own scale story (posting-bounded candidates /
       // one broadcast-kNN corpus pass). A missing rank contributes 0 —
       // the standard RRF treatment of a doc absent from one list.
-      VectorExpressions.register(s)
       // the lexical leg is the staged served list (one scoring pass for
       // q153/q165/q255 — the bm25-ranked frame at bm25RankedServed)
       val lex = TextAnalysis.bm25RankedServed(s, d)
@@ -1223,7 +1210,6 @@ object Similarity {
       // runs over an ANN SHORTLIST (q143's serving tail), not the
       // corpus; the operator shape — slice, broadcast, two-stage
       // max/sum — is identical either way.
-      VectorExpressions.register(s)
       val e = t(s, d, "embeddings")
       def tokens(df: org.apache.spark.sql.DataFrame, idCol: String,
           t: String, v: String) = df

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.functions.VectorExpressions
 
 /** Text analysis over `documents` (BASELINE.json north-star: language-ID,
   * quality scoring, token counting, document fingerprinting).
@@ -1950,7 +1949,6 @@ object TextAnalysis {
       // bounded-error-contract pattern. The char-pair domain (82 distinct
       // values > K, with exactly one true heavy hitter at every SF)
       // actually exercises eviction and the in-sketch guarantee.
-      graft.functions.FreqSketchAgg.register(s)
       val pairs = charPairs(s, d)
       heavyHitterReport(pairs,
         pairs.agg(expr("freq_sketch(pair)").as("sk"),
@@ -2170,7 +2168,6 @@ object TextAnalysis {
       // groups are huge or skewed. Identical output (same score, same
       // tie-break, rank = array index + 1): shares q85's oracle VERBATIM,
       // and the scored frame is ONE definition (tfidfScored).
-      graft.functions.TopKRowsAgg.register(s)
       tfidfScored(s, d)
         .groupBy(col("doc_id"))
         .agg(expr("topk_rows(struct(tfidf, term, tf, df), 3)").as("top"))
@@ -2321,7 +2318,6 @@ object TextAnalysis {
       // Expression. Oracle-checked: DuckDB reproduces the 64-bit wrapping
       // h = h*31 + byte via HUGEINT list_reduce mod 2^64 (+ signed
       // conversion) — byte = ascii codepoint on this ASCII corpus.
-      VectorExpressions.register(s)
       t(s, d, "documents").select(col("doc_id"),
         expr("rolling_hash(text)").as("fp"),
         expr("rolling_hash(substring(text, 1, 64))").as("fp_head"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -111,12 +112,9 @@ object StreamScale {
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
         .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
       val dst = new java.io.File(path)
-      if (dst.exists()) { def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(); () }; del(dst) }
+      FileUtils.deleteQuietly(dst)
       java.nio.file.Files.move(part.toPath, dst.toPath)
-      def del2(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del2)); f.delete(); () }
-      del2(new java.io.File(tmp))
+      FileUtils.deleteQuietly(new java.io.File(tmp))
     }
 
     if (!skipGen) timed("gen") {

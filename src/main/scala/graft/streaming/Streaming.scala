@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -300,6 +301,26 @@ object Streaming {
       case _ => None // measured: HDFS-backed wins at fixture state sizes
     }
 
+  /** Run `writes` in order against the staged stream directory `dir`,
+    * stamping the part files each write adds with mtime `t0 + i` minutes
+    * for the i-th write. FileStreamSource orders files by modification
+    * time, so the explicit stamps keep the arrival order even when
+    * writes land in one clock tick or the filesystem's timestamps are
+    * coarse. */
+  private def stageArrivals(dir: String, t0: Long,
+      writes: Seq[() => Unit]): Unit = {
+    val dp = java.nio.file.Paths.get(dir)
+    writes.zipWithIndex.foldLeft(Set.empty[String]) { case (stamped, (write, i)) =>
+      write()
+      val added = dp.toFile.list().toSeq
+        .filter(n => n.startsWith("part-") && !stamped(n))
+      added.foreach(n => java.nio.file.Files.setLastModifiedTime(dp.resolve(n),
+        java.nio.file.attribute.FileTime.fromMillis(t0 + 60000L * i)))
+      stamped ++ added
+    }
+    ()
+  }
+
   /** q159's staged stream input: one file of all real events, then two
     * sentinel files with later event times. FileStreamSource orders files
     * by modification time, so each write step's files are stamped with an
@@ -311,33 +332,15 @@ object Streaming {
     val dir = graft.Staging.dirFor("sessstream", d)
     graft.Staging.once(dir) {
       import s.implicits._
-      def stampParts(mtime: Long, stamped: Set[String]): Set[String] = {
-        val dp = java.nio.file.Paths.get(dir)
-        val parts = java.nio.file.Files.list(dp).iterator()
-        var seen = stamped
-        while (parts.hasNext) {
-          val p = parts.next()
-          if (p.getFileName.toString.startsWith("part-") &&
-              !seen(p.getFileName.toString)) {
-            java.nio.file.Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(mtime))
-            seen += p.getFileName.toString
-          }
-        }
-        seen
+      val sentinels = Seq("2024-02-01 00:00:00", "2024-02-15 00:00:00").map {
+        t => () => Seq((-1L, java.sql.Timestamp.valueOf(t), 0L))
+          .toDF("user_id", "ts", "cts")
+          .coalesce(1).write.mode("append").parquet(dir)
       }
-      events(s, d)
-        .select(col("user_id"), col("ts"), cents(col("value")).as("cts"))
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      val t0 = System.currentTimeMillis() - 300000
-      var stamped = stampParts(t0, Set.empty)
-      Seq("2024-02-01 00:00:00", "2024-02-15 00:00:00").zipWithIndex
-        .foreach { case (t, i) =>
-          Seq((-1L, java.sql.Timestamp.valueOf(t), 0L))
-            .toDF("user_id", "ts", "cts")
-            .coalesce(1).write.mode("append").parquet(dir)
-          stamped = stampParts(t0 + 60000L * (i + 1), stamped)
-        }
+      stageArrivals(dir, System.currentTimeMillis() - 300000, (() =>
+        events(s, d)
+          .select(col("user_id"), col("ts"), cents(col("value")).as("cts"))
+          .coalesce(1).write.mode("overwrite").parquet(dir)) +: sentinels)
     }
     dir
   }
@@ -427,10 +430,7 @@ object Streaming {
       "spark.sql.streaming.stateStore.providerClass").getOrElse("default")
     val ckpt = s"${graft.Staging.dirFor("ckpt", d)}/$provider"
     graft.Staging.once(ckpt) {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-      }
-      del(new java.io.File(ckpt))
+      FileUtils.deleteQuietly(new java.io.File(ckpt))
       val name = s"graft_ckpt_${System.nanoTime()}"
       val q = eventsStream(sp, d)
         .groupBy(col("event_type"))
@@ -552,12 +552,7 @@ object Streaming {
     * checkpoint). Exposed for CdcSinkSpec's two-phase restart probe. */
   private[streaming] def runCdcStream(sp: SparkSession, src: String,
       root: String, ckpt: String, d: String, wipe: Boolean = true): Unit = {
-    if (wipe) Seq(root, ckpt).foreach { p =>
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-      }
-      del(new java.io.File(p))
-    }
+    if (wipe) Seq(root, ckpt).foreach(p => FileUtils.deleteQuietly(new java.io.File(p)))
     val q = sp.readStream.schema(cdcSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
@@ -600,7 +595,6 @@ object Streaming {
       // the directory would update the per-station stats incrementally.
       // Single-batch over the golden fixture ⇒ equals the batch answer
       // (same oracle as q08/q19).
-      graft.functions.BrcSplitParse.register(sp)
       val name = s"graft_sbrc_${System.nanoTime()}"
       val lines = sp.readStream
         .schema(StructType(Seq(StructField("value", StringType))))
@@ -632,7 +626,6 @@ object Streaming {
       // the batch q144 answer — SAME manifest oracle, which binds the
       // streaming scan, the binary decode expression and the sink
       // round-trip in one check.
-      graft.functions.PngFunctions.register(sp)
       val name = s"graft_smedia_${System.nanoTime()}"
       val q = sp.readStream
         .schema(StructType(Seq(
@@ -825,7 +818,6 @@ object Streaming {
       // across partitions. Single-batch over the static corpus ⇒ the
       // contract report (exact top-16 + guarantee booleans, the q106
       // harness — ONE shared definition) matches the shared oracle.
-      graft.functions.FreqSketchAgg.register(sp)
       val name = s"graft_shh_${System.nanoTime()}"
       val q = sp.readStream.schema(docsSchema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1016,52 +1008,32 @@ object Streaming {
     val dir = graft.Staging.dirFor("latestream", d)
     graft.Staging.once(dir) {
       import s.implicits._
-      def stampParts(mtime: Long, stamped: Set[String]): Set[String] = {
-        val dp = java.nio.file.Paths.get(dir)
-        val parts = java.nio.file.Files.list(dp).iterator()
-        var seen = stamped
-        while (parts.hasNext) {
-          val p = parts.next()
-          if (p.getFileName.toString.startsWith("part-") &&
-              !seen(p.getFileName.toString)) {
-            java.nio.file.Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(mtime))
-            seen += p.getFileName.toString
-          }
-        }
-        seen
-      }
       val ev = events(s, d).select(col("event_id"), col("ts"),
         graft.Tables.cents(col("value")).as("cts"))
-      ev.where(pmod(col("event_id"), lit(101)) =!= 0)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      val t0 = System.currentTimeMillis() - 300000
-      var stamped = stampParts(t0, Set.empty)
-      // spacer sentinel: advances the watermark past every real window
-      // BEFORE the late file arrives — the watermark computed from
-      // batch N's data is first ENFORCED against batch N+2's input
-      // (one batch to compute, one to take effect), so the late rows
-      // need two batches between them and the bulk. Sentinels carry
-      // event_id = -1 and are filtered AFTER withWatermark: they move
-      // the clock but never reach the aggregate.
-      Seq((-1L, java.sql.Timestamp.valueOf("2024-02-15 00:00:00"), 0L))
-        .toDF("event_id", "ts", "cts")
-        .coalesce(1).write.mode("append").parquet(dir)
-      stamped = stampParts(t0 + 60000, stamped)
-      ev.where(pmod(col("event_id"), lit(101)) === 0)
-        .select(col("event_id"),
-          (col("ts") - expr("INTERVAL 2 DAYS")).as("ts"), col("cts"))
-        .coalesce(1).write.mode("append").parquet(dir)
-      stamped = stampParts(t0 + 120000, stamped)
-      // closing sentinel: forces eviction of anything that (wrongly)
-      // reached state after the late batch — if a late row had been
-      // admitted, it would emit here and the oracle compare would
-      // catch it
-      Seq((-1L, java.sql.Timestamp.valueOf("2024-06-01 00:00:00"), 0L))
-        .toDF("event_id", "ts", "cts")
-        .coalesce(1).write.mode("append").parquet(dir)
-      stampParts(t0 + 180000, stamped)
-      ()
+      def sentinel(ts: String) = () =>
+        Seq((-1L, java.sql.Timestamp.valueOf(ts), 0L))
+          .toDF("event_id", "ts", "cts")
+          .coalesce(1).write.mode("append").parquet(dir)
+      stageArrivals(dir, System.currentTimeMillis() - 300000, Seq(
+        () => ev.where(pmod(col("event_id"), lit(101)) =!= 0)
+          .coalesce(1).write.mode("overwrite").parquet(dir),
+        // spacer sentinel: advances the watermark past every real window
+        // BEFORE the late file arrives — the watermark computed from
+        // batch N's data is first ENFORCED against batch N+2's input
+        // (one batch to compute, one to take effect), so the late rows
+        // need two batches between them and the bulk. Sentinels carry
+        // event_id = -1 and are filtered AFTER withWatermark: they move
+        // the clock but never reach the aggregate.
+        sentinel("2024-02-15 00:00:00"),
+        () => ev.where(pmod(col("event_id"), lit(101)) === 0)
+          .select(col("event_id"),
+            (col("ts") - expr("INTERVAL 2 DAYS")).as("ts"), col("cts"))
+          .coalesce(1).write.mode("append").parquet(dir),
+        // closing sentinel: forces eviction of anything that (wrongly)
+        // reached state after the late batch — if a late row had been
+        // admitted, it would emit here and the oracle compare would
+        // catch it
+        sentinel("2024-06-01 00:00:00")))
     }
     dir
   }
@@ -1134,21 +1106,6 @@ object Streaming {
       sentinel: Boolean): String = {
     val dir = graft.Staging.dirFor(ns, d)
     graft.Staging.once(dir) {
-      def stampParts(mtime: Long, stamped: Set[String]): Set[String] = {
-        val dp = java.nio.file.Paths.get(dir)
-        val parts = java.nio.file.Files.list(dp).iterator()
-        var seen = stamped
-        while (parts.hasNext) {
-          val p = parts.next()
-          if (p.getFileName.toString.startsWith("part-") &&
-              !seen(p.getFileName.toString)) {
-            java.nio.file.Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(mtime))
-            seen += p.getFileName.toString
-          }
-        }
-        seen
-      }
       val ev = events(s, d)
         .where(col("event_type").isin("click", "purchase"))
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
@@ -1157,14 +1114,11 @@ object Streaming {
         .withColumn("slab", ntile(6).over(
           org.apache.spark.sql.expressions.Window
             .orderBy(col("ts"), col("event_id"))))
-      val t0 = System.currentTimeMillis() - 600000
-      var stamped = Set.empty[String]
-      (1 to 6).foreach { k =>
+      val slabs = (1 to 6).map { k => () =>
         ev.where(col("slab") === k).drop("slab")
           .coalesce(1).write.mode("append").parquet(dir)
-        stamped = stampParts(t0 + 60000L * k, stamped)
       }
-      if (sentinel) {
+      val close = if (!sentinel) Nil else Seq { () =>
         import s.implicits._
         // sentinel event time is DERIVED: max(ts) of the staged corpus
         // + 180 days (vastly past the 1 h 10 min state horizon). A
@@ -1177,8 +1131,8 @@ object Streaming {
         Seq((-1L, sentTs, -1L, "click"), (-2L, sentTs, -1L, "purchase"))
           .toDF("event_id", "ts", "user_id", "event_type")
           .coalesce(1).write.mode("append").parquet(dir)
-        stamped = stampParts(t0 + 60000L * 7, stamped)
       }
+      stageArrivals(dir, System.currentTimeMillis() - 540000, slabs ++ close)
     }
     dir
   }

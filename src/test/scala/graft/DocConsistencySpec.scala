@@ -6,9 +6,10 @@ package graft
   * spec fails the build whenever N != SparkEntry.queries.size — the only
   * way to add a query is to bump the README in the same change. It also
   * reads src/main so the session builder and the stage root each keep
-  * exactly one home (GraftSession, Staging), memoized frames stay Staging
-  * stages, the JPEG and PNG codecs each keep one core, and the binary
-  * decoders share one Malformed. */
+  * exactly one home (GraftSession, Staging), SQL functions keep one
+  * catalog (GraftExtensions), memoized frames stay Staging stages, the
+  * JPEG and PNG codecs each keep one core, and the binary decoders share
+  * one Malformed. */
 class DocConsistencySpec extends SparkSpec {
 
   test("README SUITE_COUNT matches SparkEntry.queries.size") {
@@ -76,6 +77,29 @@ class DocConsistencySpec extends SparkSpec {
       .filter(_._2.nonEmpty)
     assert(stray.isEmpty,
       s"build sessions with GraftSession, stage through Staging: $stray")
+  }
+
+  test("one function registration path in src/main: the GraftExtensions catalog") {
+    // the copies this guards against: a register(spark) method per
+    // function module beside the extension's own list, the two lists
+    // drifting apart. lsh_bands alone binds per-call state
+    // (VectorExpressions.registerLsh).
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, "src/main must be readable from the repo root")
+    def offenders(needle: String, home: String): Seq[String] = files
+      .filter(_.getFileName.toString != home)
+      .filter(f => java.nio.file.Files.readString(f).contains(needle))
+      .map(_.toString).sorted
+    val stray = Seq(
+      "registerFunction(" -> offenders("registerFunction(",
+        "GraftExtensions.scala"),
+      "createOrReplaceTempFunction(" -> offenders(
+        "createOrReplaceTempFunction(", "VectorExpressions.scala"))
+      .filter(_._2.nonEmpty)
+    assert(stray.isEmpty,
+      s"add SQL functions to GraftExtensions.functions: $stray")
   }
 
   test("one JPEG codec core and one PNG decoder in src/main") {

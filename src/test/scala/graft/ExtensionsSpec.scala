@@ -5,6 +5,41 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionsSpec extends AnyFunSuite {
 
+  /** Catalog names `s` cannot resolve, plus one evaluated call of a
+    * function the config path once lacked. */
+  private def unresolved(s: SparkSession): Seq[String] = {
+    val names = GraftExtensions.functions.map(_._1.funcName)
+    assert(names.distinct.size == names.size, s"duplicate catalog names: $names")
+    val missing = names.filterNot(s.catalog.functionExists)
+    if (missing.isEmpty) {
+      val nfc = s.sql("SELECT nfc_normalize('e\u0301') AS n").collect().head
+      assert(nfc.getString(0) == "\u00e9")
+    }
+    missing
+  }
+
+  test("every catalog function resolves via the extension, install and a session clone") {
+    val plain = SparkSpec.session.newSession()
+    assert(!plain.catalog.functionExists("png_full"),
+      "a bare newSession() starts without the graft catalog")
+    assert(unresolved(Tables.sessionClone(plain)).isEmpty)
+    GraftExtensions.install(plain)
+    assert(unresolved(plain).isEmpty)
+    val prior = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    try {
+      val ext = SparkSession.builder()
+        .config("spark.ui.enabled", "false")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+      assert(ext ne SparkSpec.session)
+      assert(unresolved(ext).isEmpty)
+    } finally {
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+      prior.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
   test("GraftExtensions injects cosine_sim/rolling_hash via session config") {
     // force a fresh session (same SparkContext) so extensions apply
     val prior = SparkSession.getDefaultSession
@@ -45,14 +80,14 @@ class ExtensionsSpec extends AnyFunSuite {
         s.sql("SELECT freq_sketch(id) FROM range(10)").collect()
       }
       assert(ferr.getMessage.contains("STRING"))
-      // bloom_agg/might_contain: Spark's runtime-filter pair, injected as
-      // SQL — the bloom side must be a scalar subquery (or foldable), and
-      // membership has no false negatives
       // png_ihdr / wav_fmt: injected media-header decoders reject junk
       val media = s.sql(
         "SELECT png_ihdr(CAST('junk' AS BINARY)) AS p, " +
           "wav_fmt(CAST('junk' AS BINARY)) AS w").collect().head
       assert(media.isNullAt(0) && media.isNullAt(1))
+      // bloom_agg/might_contain: Spark's runtime-filter pair, injected as
+      // SQL — the bloom side must be a scalar subquery (or foldable), and
+      // membership has no false negatives
       s.range(0, 100).createOrReplaceTempView("bloom_keys")
       val hits = s.sql(
         """SELECT count(*) AS n FROM range(200)

@@ -582,12 +582,21 @@ class PlanSpec extends SparkSpec {
   test("q299: PPR reuses q128's cached pre-partitioned edge frame") {
     graft.CacheRegistry.release(spark)
     SparkEntry.queries("q128_pagerank")(spark, sf0001).collect()
-    val after128 = spark.sparkContext.getPersistentRDDs.size
+    val frames128 = graft.CacheRegistry.frames(spark)
+    val after128 = spark.sparkContext.getPersistentRDDs.keySet
     SparkEntry.queries("q299_ppr")(spark, sf0001).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size == after128,
-      "q299 must materialize NO new persisted RDDs — its edges/deg " +
-        "plans are identical to q128's, so CacheManager dedupes them " +
-        "onto one exchange")
+    // ids, not a count: getPersistentRDDs reads a weak-valued map, so a
+    // GC between the two reads drops persisted RDDs nothing references
+    // any more (another suite's checkpoints on this shared session)
+    val fresh = spark.sparkContext.getPersistentRDDs.keySet -- after128
+    assert(fresh.isEmpty,
+      s"q299 must materialize NO new persisted RDDs (got $fresh) — its " +
+        "edges/deg plans are identical to q128's, so CacheManager " +
+        "dedupes them onto one exchange")
+    assert(frames128.nonEmpty && frames128.forall(_.storageLevel.isValid),
+      "q128's registered frames must still be cached after q299")
+    assert(graft.CacheRegistry.frames(spark).size == frames128.size,
+      "q299 must register no cache entry of its own")
     val p = plan("q299_ppr")
     assert(p.contains("InMemoryTableScan") || p.contains("Scan In-memory"),
       s"the iteration must read the cached edge frame:\n$p")

@@ -21,13 +21,8 @@ object SparkSpec {
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
   private lazy val hookOnce: Unit = {
     sys.addShutdownHook {
-      tmpPaths.forEach(p => deleteRec(p.toFile))
+      tmpPaths.forEach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
     }
-    ()
-  }
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(deleteRec))
-    f.delete()
     ()
   }
   def cleanOnExit(p: java.nio.file.Path): java.nio.file.Path = {
@@ -48,6 +43,7 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    GraftExtensions.install(s)
     s
   }
 }

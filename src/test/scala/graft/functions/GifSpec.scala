@@ -15,7 +15,6 @@ class GifSpec extends SparkSpec {
 
   test("layer split: rotten LZW passes the walk, voids the decode; " +
     "structural corruption voids both") {
-    graft.functions.GifFunctions.register(spark)
     val rows = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.gif")
       .load(graft.Fixtures.path("gif"))

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class JpegColorSpec extends SparkSpec {
 
   test("color and grayscale profiles split exactly; segments accept both") {
-    graft.functions.JpegFunctions.register(spark)
     val color = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.jpg")
       .load(graft.Fixtures.path("jpeg_color"))
@@ -38,7 +37,6 @@ class JpegColorSpec extends SparkSpec {
   }
 
   test("restart markers reset all three DC predictors") {
-    graft.functions.JpegFunctions.register(spark)
     val r = spark.read.format("binaryFile")
       .option("pathGlobFilter", "color_rst.jpg")
       .load(graft.Fixtures.path("jpeg_color"))

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
 class JpegDecodeSpec extends SparkSpec {
 
   test("exactly the planted AC-run corruption decodes to null") {
-    graft.functions.JpegFunctions.register(spark)
     val rows = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.jpg")
       .load(graft.Fixtures.path("jpeg_decode"))
@@ -30,7 +29,6 @@ class JpegDecodeSpec extends SparkSpec {
     // q315's segment fixtures are valid JPEGs structurally, but none is
     // baseline-grayscale-1x1 with block-aligned dims — jpeg_pixels must
     // refuse them all rather than emit wrong pixels
-    graft.functions.JpegFunctions.register(spark)
     val rows = spark.read.format("binaryFile")
       .option("pathGlobFilter", "img_*.jpg")
       .load(graft.Fixtures.path("jpeg"))
@@ -51,7 +49,6 @@ class JpegDecodeSpec extends SparkSpec {
     // predictor would produce different pixels and a different CRC than
     // the manifest the q316 oracle already pinned — here we just pin the
     // rst count surfaced by the decode itself
-    graft.functions.JpegFunctions.register(spark)
     val r = spark.read.format("binaryFile")
       .option("pathGlobFilter", "gray_rst.jpg")
       .load(graft.Fixtures.path("jpeg_decode"))

@@ -87,7 +87,6 @@ class JpegProgColorSpec extends SparkSpec {
     }
     // one binaryFile scan over intact + planted files: the job succeeds,
     // nulls land exactly on the planted rows
-    JpegFunctions.register(spark)
     val dir = SparkSpec.cleanOnExit(java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("/tmp"), "graft_jpeg_selectors"))
     (intact ++ plants).foreach { case (name, b) =>

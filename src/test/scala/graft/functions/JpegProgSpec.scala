@@ -15,7 +15,6 @@ class JpegProgSpec extends SparkSpec {
       java.nio.file.Paths.get(graft.Fixtures.path("jpeg_prog"), name))
 
   test("progressive and baseline profiles split exactly; segments accept both") {
-    graft.functions.JpegFunctions.register(spark)
     val rows = spark.read.format("binaryFile")
       .option("pathGlobFilter", "prog_*.jpg")
       .load(graft.Fixtures.path("jpeg_prog"))

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
 class JpegSpec extends SparkSpec {
 
   test("exactly the three planted corruptions decode to null") {
-    graft.functions.JpegFunctions.register(spark)
     val rows = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.jpg")
       .load(graft.Fixtures.path("jpeg"))

@@ -8,7 +8,6 @@ class PngSpec extends SparkSpec {
 
   test("q144: IHDR decode matches the generation manifest, null on junk") {
     import spark.implicits._
-    PngFunctions.register(spark)
     val got = graft.SparkEntry.queries("q144_png_ingest")(spark, sf0001)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -99,7 +98,6 @@ class PngSpec extends SparkSpec {
 
   test("q167: pixel decode matches javax.imageio — an INDEPENDENT decoder — on every fixture") {
     import spark.implicits._
-    PngFunctions.register(spark)
     // ImageIO ships in the JDK and implements PNG from the spec on its
     // own: agreeing with it on every fixture (including the img_g/img_h
     // filter schedules that exercise Sub/Up/Average/Paeth) certifies the

@@ -9,7 +9,6 @@ class WavSpec extends SparkSpec {
 
   test("q146: fmt decode matches the generation manifest, null on junk") {
     import spark.implicits._
-    WavFunctions.register(spark)
     val got = graft.SparkEntry.queries("q146_wav_ingest")(spark, sf0001)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -68,7 +67,6 @@ class WavSpec extends SparkSpec {
 
   test("q156: pcm stats match a brute-force decode of the fixture bytes") {
     import spark.implicits._
-    WavFunctions.register(spark)
     // independent model: parse each fixture's data chunk in plain Scala
     // (sequential walk, no shared code with WavHeader.pcmStats' loop
     // beyond the wire format itself)

@@ -39,7 +39,6 @@ class FormatParitySpec extends SparkSpec {
 
   test("split-expression tenths path agrees with the CSV datasource scan") {
     // q94's shape: text lines parsed by brc_station/brc_tenths
-    graft.functions.BrcSplitParse.register(spark)
     def readTenths(path: String) = spark.read.text(path).select(
       expr("brc_station(value)").as("station"),
       expr("brc_tenths(value)").as("t"))

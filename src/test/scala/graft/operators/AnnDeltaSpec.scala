@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.VectorExpressions
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +21,6 @@ class AnnDeltaSpec extends SparkSpec {
   }
 
   test("q151: delta admission appends into cell= dirs, base files untouched") {
-    VectorExpressions.register(spark)
     graft.Staging.forgetCorpus(sf0001)
     val codesDir = new java.io.File(Similarity.annIncStageDir(sf0001) + "/codes")
 
@@ -53,7 +51,6 @@ class AnnDeltaSpec extends SparkSpec {
   }
 
   test("q151: admission work is delta-proportional (filter below explode)") {
-    VectorExpressions.register(spark)
     val deltaPred =
       (col("vec_id") % Similarity.AnnDeltaMod) === Similarity.AnnDeltaRem
     // analyzed plan, not optimized: the encode/assign subtrees are

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.VectorExpressions
 import org.apache.spark.sql.functions._
 
 class DedupSimilaritySpec extends SparkSpec {
@@ -277,7 +276,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("cosine_sim expression matches higher-order-function formulation") {
-    VectorExpressions.register(spark)
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet").limit(50)
     val a = e.select(col("vec_id").as("i"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("j"), col("embedding").as("eb"))
@@ -430,7 +428,6 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("q127 rerank: results drawn from the PQ shortlist, recall >= PQ-only") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val e = graft.Tables.t(spark, sf0001, "embeddings")
     // exact ground truth: brute-force cosine top-10 per query (q70's shape)
     val q = e.filter(col("vec_id") < 3)

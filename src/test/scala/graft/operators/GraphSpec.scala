@@ -46,18 +46,18 @@ class GraphSpec extends SparkSpec {
     graft.CacheRegistry.release(spark)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     Graph.queries("q128_pagerank")(spark, sf0001).collect()
-    assert(graft.CacheRegistry.size(spark) >= 2,
+    assert(graft.CacheRegistry.frames(spark).size >= 2,
       "edges + deg must route through the shared registry")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
       "materialization must actually cache blocks")
     // a second construction finds its frames already cached and registers
     // nothing new: one registry entry per cache entry, not per construction
-    val registered = graft.CacheRegistry.size(spark)
+    val registered = graft.CacheRegistry.frames(spark).size
     Graph.queries("q128_pagerank")(spark, sf0001).collect()
-    assert(graft.CacheRegistry.size(spark) == registered,
+    assert(graft.CacheRegistry.frames(spark).size == registered,
       "re-running q128 must not grow the registry")
     graft.CacheRegistry.release(spark)
-    assert(graft.CacheRegistry.size(spark) == 0)
+    assert(graft.CacheRegistry.frames(spark).size == 0)
     assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before),
       "no MEMORY_AND_DISK entries may survive release()")
   }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.VectorExpressions
 import org.apache.spark.sql.functions._
 
 /** q143 (IVF + PQ + exact rerank) must earn its keep on BOTH axes the
@@ -16,7 +15,6 @@ class IvfPqSpec extends SparkSpec {
       .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
 
   test("q143: recall vs brute force >= q127's, at a fraction of the ADC scan") {
-    VectorExpressions.register(spark)
     val e = graft.Tables.t(spark, sf0001, "embeddings")
     val n = e.count()
     // exact ground truth: brute-force cosine top-10 per query
@@ -61,7 +59,6 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("q327: per-subspace Lloyd strictly reduces quantization error; recall measured") {
-    VectorExpressions.register(spark)
     val sfdir = "/root/testdata/sf0.01"
     val e = graft.Tables.t(spark, sfdir, "embeddings")
     val q = e.filter(col("vec_id") < 3)
@@ -123,7 +120,6 @@ class IvfPqSpec extends SparkSpec {
     // fine-grained MSE gain shows up in ranking only over far more
     // queries than the suite's fixed three — the q327 scaladoc carries
     // the same verdict.
-    VectorExpressions.register(spark)
     import org.apache.spark.sql.functions._
     val dir = tempDir("pq_clustered").toString
     spark.range(4000).selectExpr(

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.VectorExpressions
 
 /** Crash consistency of the durable Staging protocol (round-7 verdict
   * #4): the q151/q169 claim — "an index is built once, maintained by
@@ -39,7 +38,6 @@ class StageCrashSpec extends SparkSpec {
   }
 
   test("ann delta: crash between append and marker replays to exactly-once") {
-    VectorExpressions.register(spark)
     val corpus = mkCorpus("annd")
     val codes = Similarity.annIncStageDir(corpus) + "/codes"
     Similarity.annIncBuild(spark, corpus)
@@ -68,7 +66,6 @@ class StageCrashSpec extends SparkSpec {
   }
 
   test("ann base: crash mid overwrite (no marker) rebuilds the full stage") {
-    VectorExpressions.register(spark)
     val corpus = mkCorpus("annb")
     val codes = Similarity.annIncStageDir(corpus) + "/codes"
     Similarity.annIncBuild(spark, corpus)

@@ -2,14 +2,12 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.Tables
-import graft.functions.VectorExpressions
 import graft.streaming.Streaming
 import org.apache.spark.sql.functions._
 
 class TextStreamingSpec extends SparkSpec {
 
   test("rolling_hash: golden value and codegen/eval agreement") {
-    VectorExpressions.register(spark)
     // h("abc") = ('a'*31 + 'b')*31 + 'c' = 96354
     val got = spark.sql("SELECT rolling_hash('abc') AS h").collect().head.getLong(0)
     assert(got == 96354L)

@@ -67,7 +67,6 @@ class StatefulStreamingSpec extends SparkSpec {
     // micro-batches, and the final sketch must satisfy the Misra-Gries
     // envelope against exact counts over ALL batches combined.
     import spark.implicits._
-    graft.functions.FreqSketchAgg.register(spark)
     val K = graft.functions.FreqSketchAgg.K
     val dir = tempDir("graft_mbsk").toString
     // char pairs, not words: 82 distinct values > K, so eviction fires
