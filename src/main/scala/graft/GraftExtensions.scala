@@ -31,9 +31,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * injects it (above); `install` registers the same entries on a session
   * built without the extension — `GraftSession`, `Tables.sessionClone`
   * and the `SparkEntry.queries` contract call it. Re-installing is one
-  * registry put per function, so it needs no per-session memo.
-  * `lsh_bands` is not here: it binds a concrete hyperplane matrix
-  * (`VectorExpressions.registerLsh`). */
+  * registry put per function, so it needs no per-session memo. */
 object GraftExtensions {
 
   /** The triple `SparkSessionExtensions.injectFunction` takes. */
@@ -53,6 +51,9 @@ object GraftExtensions {
       s"rolling_window_hashes window length must be an int literal, got $other")
   }
 
+  /** The hyperplane matrix `lsh_bands` binds, flattened once. */
+  private val lshPlanes: Array[Double] = graft.operators.Similarity.planes.flatten
+
   val functions: Seq[FunctionDescription] = Seq(
     // 1BRC line parse and the reference's Records struct as an aggregate
     fn("brc_station")(e => BrcStation(e.head)),
@@ -60,6 +61,8 @@ object GraftExtensions {
     fn("brc_stats")(e => BrcStatsAgg(e.head)),
     // vectors and text
     fn("cosine_sim")(e => CosineSimilarity(e.head, e(1))),
+    fn("lsh_bands")(e => LshBands(e.head, lshPlanes,
+      graft.operators.Similarity.NBands, graft.operators.Similarity.BitsPerBand)),
     fn("rolling_hash")(e => RollingHash(e.head)),
     fn("rolling_window_hashes")(e => RollingWindowHashes(e.head, litInt(e(1)))),
     fn("nfc_normalize")(e => NfcNormalize(e.head)),

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -262,12 +261,4 @@ case class NfcNormalize(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object VectorExpressions {
-  /** Register lsh_bands bound to a concrete hyperplane matrix. */
-  def registerLsh(spark: SparkSession, planes: Array[Double],
-      nBands: Int, bitsPerBand: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("lsh_bands",
-      exprs => LshBands(exprs.head, planes, nBands, bitsPerBand), "built-in")
 }

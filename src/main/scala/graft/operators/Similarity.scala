@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.functions.VectorExpressions
 
 /** Similarity search over the `embeddings` table (BASELINE.json north-star:
   * ANN over an embedding column).
@@ -69,12 +68,10 @@ object Similarity {
   /** embeddings exploded to (vec_id, band, key): one fused codegen pass
     * (LshBands) computes all 16 plane dots per vector — no per-plane
     * interpreted lambdas, no embedding payload carried into the join. */
-  private def bandedVectors(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.registerLsh(s, planes.flatten, NBands, BitsPerBand)
+  private def bandedVectors(s: SparkSession, d: String): DataFrame =
     t(s, d, "embeddings")
       .select(col("vec_id"),
         posexplode(expr("lsh_bands(embedding)")).as(Seq("band", "key")))
-  }
 
   /** LSH candidate pairs verified with exact cosine ≥ CosThreshold —
     * shared by q71 (pair search) and q74 (near-dup dedup). Candidate pairs

@@ -5,7 +5,9 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -16,6 +18,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.BrcParse
 
@@ -57,6 +60,15 @@ import graft.functions.BrcParse
   * folds each range into one row per station ([[BrcFoldReader]], the
   * reference's per-chunk station table) and Spark keeps the final merge.
   * Anything else, or a filter left above the scan, keeps row output.
+  *
+  * Hadoop conf: the scan and the sink read and write through the Hadoop
+  * `Configuration` of the session that built the plan (its
+  * `spark.hadoop.*` settings, `fs.*.impl` schemes, credentials), captured
+  * in `newScanBuilder` / `newWriteBuilder` while that session is active.
+  * The conf (~110 KB serialized) reaches the tasks as one broadcast — one
+  * per scan, made on its first `createReaderFactory`, and one per write
+  * job — so the reader and writer factories in every task binary hold
+  * only the broadcast handle, as Spark's own file scans do.
   */
 class BrcDataSource extends TableProvider
   with org.apache.spark.sql.sources.DataSourceRegister {
@@ -139,7 +151,9 @@ class BrcTable(paths: Seq[String], splitBytes: Long)
     * (partitionId-taskId), so retries/speculation never clobber, commit
     * is a no-op and abort best-effort deletes. Overwrite mode arrives as
     * SupportsTruncate — existing data files are cleared once,
-    * driver-side, before the factory ships. */
+    * driver-side, before the factory ships. The building session's Hadoop
+    * conf is captured here; each job broadcasts it once, and the factory
+    * carries only the handle. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -148,8 +162,8 @@ class BrcTable(paths: Seq[String], splitBytes: Long)
     require(info.schema().map(f => (f.name, f.dataType)) ==
       BrcDataSource.schema.map(f => (f.name, f.dataType)),
       s"brc sink requires schema (station STRING, t LONG), got ${info.schema()}")
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+    val session = org.apache.spark.sql.SparkSession.active
+    val conf = session.sessionState.newHadoopConf()
     new org.apache.spark.sql.connector.write.WriteBuilder
       with org.apache.spark.sql.connector.write.SupportsTruncate {
       private var doTruncate = false
@@ -161,7 +175,7 @@ class BrcTable(paths: Seq[String], splitBytes: Long)
         new org.apache.spark.sql.connector.write.Write {
           override def toBatch
               : org.apache.spark.sql.connector.write.BatchWrite =
-            new BrcBatchWrite(paths.head, doTruncate, sconf)
+            new BrcBatchWrite(paths.head, doTruncate, conf, session.sparkContext)
         }
     }
   }
@@ -172,8 +186,7 @@ class BrcTable(paths: Seq[String], splitBytes: Long)
     // resolving SparkSession.active later, at plan/execute time, can pick a
     // different session's conf (or none) in multi-session apps
     val session = org.apache.spark.sql.SparkSession.active
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      session.sessionState.newHadoopConf())
+    val conf = session.sessionState.newHadoopConf()
     // the numbers Spark's own file sources split by
     val sql = session.sessionState.conf
     val par = sql.getConf(
@@ -200,7 +213,8 @@ class BrcTable(paths: Seq[String], splitBytes: Long)
         pushed.isDefined
       }
       override def build(): Scan =
-        new BrcScanV2(paths, splitBytes, par, floor, pruned, pushed, sconf)
+        new BrcScanV2(paths, splitBytes, par, floor, pruned, pushed, conf,
+          session.sparkContext)
     }
   }
 }
@@ -208,8 +222,10 @@ class BrcTable(paths: Seq[String], splitBytes: Long)
 case class BrcCommitMessage(path: String)
   extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
-class BrcBatchWrite(dir: String, truncate: Boolean,
-    sconf: org.apache.spark.util.SerializableConfiguration)
+/** One write job into `dir`, through `conf` (driver side) and one
+  * broadcast of it (tasks). */
+class BrcBatchWrite(dir: String, truncate: Boolean, conf: Configuration,
+    sc: SparkContext)
   extends org.apache.spark.sql.connector.write.BatchWrite {
 
   override def createBatchWriterFactory(
@@ -217,7 +233,7 @@ class BrcBatchWrite(dir: String, truncate: Boolean,
       : org.apache.spark.sql.connector.write.DataWriterFactory = {
     // driver-side, once per job: prepare the target dir
     val p = new Path(dir)
-    val fs = p.getFileSystem(sconf.value)
+    val fs = p.getFileSystem(conf)
     if (truncate && fs.exists(p))
       fs.listStatus(p).filter(s =>
         !(s.getPath.getName.startsWith("_") ||
@@ -225,7 +241,7 @@ class BrcBatchWrite(dir: String, truncate: Boolean,
           s.getPath.getName.endsWith(".inprogress")) // crashed-writer orphans
         .foreach(s => fs.delete(s.getPath, false))
     fs.mkdirs(p)
-    BrcWriterFactory(dir, sconf)
+    BrcWriterFactory(dir, sc.broadcast(new SerializableConfiguration(conf)))
   }
   override def commit(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
@@ -233,7 +249,7 @@ class BrcBatchWrite(dir: String, truncate: Boolean,
   override def abort(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
       : Unit = {
-    val fs = new Path(dir).getFileSystem(sconf.value)
+    val fs = new Path(dir).getFileSystem(conf)
     messages.collect { case BrcCommitMessage(p) =>
       fs.delete(new Path(p), false)
     }
@@ -241,18 +257,18 @@ class BrcBatchWrite(dir: String, truncate: Boolean,
   }
 }
 
+/** Ships to every write task: the target dir and the conf's broadcast. */
 case class BrcWriterFactory(dir: String,
-    sconf: org.apache.spark.util.SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
   extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new BrcDataWriter(s"$dir/part-$partitionId-$taskId.brc", sconf)
+    new BrcDataWriter(s"$dir/part-$partitionId-$taskId.brc", conf.value.value)
 }
 
 /** Serializes (station UTF8String, t tenths) to `station;d?dd.d\n` —
   * digit arithmetic, no String/format allocation per row. */
-class BrcDataWriter(path: String,
-    sconf: org.apache.spark.util.SerializableConfiguration)
+class BrcDataWriter(path: String, conf: Configuration)
   extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
 
   private val p = new Path(path)
@@ -265,7 +281,7 @@ class BrcDataWriter(path: String,
   // retry's output. Double-commit of one partition is excluded by
   // Spark's output commit coordinator (BatchWrite.useCommitCoordinator
   // defaults true); truncate-mode job setup sweeps old orphans.
-  private val fs = p.getFileSystem(sconf.value)
+  private val fs = p.getFileSystem(conf)
   private val staging = new Path(p.getParent, s".${p.getName}.inprogress")
   private val out = new java.io.BufferedOutputStream(
     fs.create(staging, true), 1 << 20)
@@ -304,12 +320,15 @@ class BrcDataWriter(path: String,
 
 /** The `brc` scan: one row per line of `pruned`, or with a pushed
   * aggregate `agg` one row per station and range (`station`, then one
-  * LONG per aggregate). */
+  * LONG per aggregate). The driver lists files through `conf`; the tasks
+  * get it from one broadcast, made on the first `createReaderFactory`
+  * and shared by every plan copy that holds this scan. */
 class BrcScanV2(paths: Seq[String], splitBytes: Long, par: Int, floor: Long,
-    pruned: StructType, agg: Option[Aggregation],
-    sconf: org.apache.spark.util.SerializableConfiguration)
+    pruned: StructType, agg: Option[Aggregation], conf: Configuration,
+    sc: SparkContext)
   extends Scan with Batch {
   private val kinds = agg.flatMap(BrcDataSource.foldKinds)
+  private lazy val confBroadcast = sc.broadcast(new SerializableConfiguration(conf))
   override def readSchema(): StructType = agg.fold(pruned) { a =>
     StructType(BrcDataSource.schema("station") +:
       a.aggregateExpressions.toSeq.map(f =>
@@ -323,8 +342,7 @@ class BrcScanV2(paths: Seq[String], splitBytes: Long, par: Int, floor: Long,
     }
 
   /** Every input file, in order. */
-  private def inputFiles(): Seq[FileStatus] = {
-    val conf = sconf.value
+  private def inputFiles(): Seq[FileStatus] =
     paths.flatMap { path =>
       val p = new Path(path)
       val fs = p.getFileSystem(conf)
@@ -349,7 +367,6 @@ class BrcScanV2(paths: Seq[String], splitBytes: Long, par: Int, floor: Long,
       val roots = if (matched.nonEmpty) matched else Seq(fs.getFileStatus(p))
       roots.flatMap(files)
     }
-  }
 
   /** Byte-balanced ranges over the concatenated files (sizes differ by at
     * most one byte), each a list of per-file segments. */
@@ -375,19 +392,20 @@ class BrcScanV2(paths: Seq[String], splitBytes: Long, par: Int, floor: Long,
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // capture only serializable values, not `this`
-    val fieldNames = pruned.fieldNames.toSeq
-    val foldKinds = kinds
-    val confForReaders = sconf
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-        val p = partition.asInstanceOf[BrcInputPartition]
-        foldKinds.fold[PartitionReader[InternalRow]](
-          new BrcPartitionReader(p, fieldNames, confForReaders))(
-          new BrcFoldReader(p, _, confForReaders))
-      }
-    }
+  override def createReaderFactory(): PartitionReaderFactory =
+    BrcReaderFactory(pruned.fieldNames.toSeq, kinds, confBroadcast)
+}
+
+/** Ships to every scan task: the projected fields, the fold codes of a
+  * pushed aggregate, and the conf's broadcast. */
+case class BrcReaderFactory(fields: Seq[String], kinds: Option[Array[Int]],
+    conf: Broadcast[SerializableConfiguration])
+  extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[BrcInputPartition]
+    kinds.fold[PartitionReader[InternalRow]](
+      new BrcPartitionReader(p, fields, conf.value.value))(
+      new BrcFoldReader(p, _, conf.value.value))
   }
 }
 
@@ -409,8 +427,7 @@ case class BrcInputPartition(segments: Seq[BrcSegment]) extends InputPartition
   * and the other tasks' compiled drain loops kept calling it in the
   * interpreter (1e7 rows after a CSV pass: 2.8–7.5 s instead of 1.6 s). */
 class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
-    sconf: org.apache.spark.util.SerializableConfiguration,
-    fold: BrcFoldReader = null)
+    conf: Configuration, fold: BrcFoldReader = null)
   extends PartitionReader[InternalRow] {
 
   // column pruning: parse work is proportional to the projected columns —
@@ -437,7 +454,7 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
     if (!segments.hasNext) return false
     seg = segments.next()
     val hp = new Path(seg.path)
-    in = hp.getFileSystem(sconf.value).open(hp)
+    in = hp.getFileSystem(conf).open(hp)
     in.seek(seg.start)
     limit = 0; pos = 0; filePos = seg.start; exhausted = false
     // a segment starting mid-file begins at the first line AFTER the next
@@ -536,14 +553,13 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
   * reader emits one row per station: `station`, then one LONG per pushed
   * aggregate, in pushed order. The sum uses `Math.addExact`, so overflow
   * throws as Spark's ANSI `Sum` does. */
-class BrcFoldReader(p: BrcInputPartition, kinds: Array[Int],
-    sconf: org.apache.spark.util.SerializableConfiguration)
+class BrcFoldReader(p: BrcInputPartition, kinds: Array[Int], conf: Configuration)
   extends PartitionReader[InternalRow] {
   import BrcDataSource._
 
   private val walk = new BrcPartitionReader(p,
     if (kinds.forall(_ == FoldCountStar)) Seq("station") else Seq("station", "t"),
-    sconf, this)
+    conf, this)
   private var keys = new Array[Array[Byte]](1024)
   private var hashes = new Array[Int](keys.length)
   // per slot: min, max, sum, count — a fold code is its value's offset

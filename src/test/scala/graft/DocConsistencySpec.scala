@@ -82,8 +82,8 @@ class DocConsistencySpec extends SparkSpec {
   test("one function registration path in src/main: the GraftExtensions catalog") {
     // the copies this guards against: a register(spark) method per
     // function module beside the extension's own list, the two lists
-    // drifting apart. lsh_bands alone binds per-call state
-    // (VectorExpressions.registerLsh).
+    // drifting apart. lsh_bands is there too, bound to one hyperplane
+    // matrix.
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
       .toArray.map(_.asInstanceOf[java.nio.file.Path])
       .filter(_.toString.endsWith(".scala")).toSeq
@@ -96,7 +96,7 @@ class DocConsistencySpec extends SparkSpec {
       "registerFunction(" -> offenders("registerFunction(",
         "GraftExtensions.scala"),
       "createOrReplaceTempFunction(" -> offenders(
-        "createOrReplaceTempFunction(", "VectorExpressions.scala"))
+        "createOrReplaceTempFunction(", "GraftExtensions.scala"))
       .filter(_._2.nonEmpty)
     assert(stray.isEmpty,
       s"add SQL functions to GraftExtensions.functions: $stray")

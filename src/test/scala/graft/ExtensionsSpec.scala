@@ -10,6 +10,7 @@ class ExtensionsSpec extends AnyFunSuite {
   private def unresolved(s: SparkSession): Seq[String] = {
     val names = GraftExtensions.functions.map(_._1.funcName)
     assert(names.distinct.size == names.size, s"duplicate catalog names: $names")
+    assert(names.contains("lsh_bands"), "q71/q74's LSH bander is a catalog entry")
     val missing = names.filterNot(s.catalog.functionExists)
     if (missing.isEmpty) {
       val nfc = s.sql("SELECT nfc_normalize('e\u0301') AS n").collect().head

@@ -82,8 +82,7 @@ class BrcAggPushdownSpec extends SparkSpec {
     val text = "Llanfairpwllgwyngyll;1.0\nB;2.0\n"
     val path = file(text)
     same(path, Seq(4L, 8L))
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      new org.apache.hadoop.conf.Configuration())
+    val conf = new org.apache.hadoop.conf.Configuration()
     // (4, 8] lies inside the first line: the split skips to the line after
     // its first '\n', which starts past its end
     val reader = new BrcFoldReader(BrcInputPartition(Seq(BrcSegment(
@@ -143,8 +142,7 @@ class BrcAggPushdownSpec extends SparkSpec {
   test("a long sum that overflows throws like Spark's Sum") {
     // a real overflow needs ~9.2e15 lines of 999.9, so drive the table
     // directly: a sum past Long.MaxValue must throw
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      new org.apache.hadoop.conf.Configuration())
+    val conf = new org.apache.hadoop.conf.Configuration()
     val path = file("A;1.0\n")
     val reader = new BrcFoldReader(BrcInputPartition(Seq(BrcSegment(
       new java.io.File(path).toURI.toString, 0, 6))),
