@@ -16,6 +16,7 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Avg, C
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
@@ -59,7 +60,10 @@ import graft.functions.BrcParse
   * of `t` (no DISTINCT) or COUNT(*) — `OneBrc.tenthsPartials` — the scan
   * folds each range into one row per station ([[BrcFoldReader]], the
   * reference's per-chunk station table) and Spark keeps the final merge.
-  * Anything else, or a filter left above the scan, keeps row output.
+  * Anything else, or a filter left above the scan, keeps row output. A
+  * fold that reads `t` walks each line once, a word at a time (R4's one
+  * pass per line, R5's word-wide separator search and loop-free measure
+  * parse); the lines that walk cannot read take the line loop.
   *
   * Hadoop conf: the scan and the sink read and write through the Hadoop
   * `Configuration` of the session that built the plan (its
@@ -425,7 +429,14 @@ case class BrcInputPartition(segments: Seq[BrcSegment]) extends InputPartition
   * loop inside `next()` matters on a cold JVM: with a call per line, the
   * first segment to end mid-file deoptimized `next()` late in the job,
   * and the other tasks' compiled drain loops kept calling it in the
-  * interpreter (1e7 rows after a CSV pass: 2.8–7.5 s instead of 1.6 s). */
+  * interpreter (1e7 rows after a CSV pass: 2.8–7.5 s instead of 1.6 s).
+  * A fold that reads `t` on a little-endian host hands the buffer to
+  * [[BrcFoldReader.addLines]] after each line the loop reads: that word
+  * walk, its own loop, folds the owned lines after it and stops at the
+  * first one it cannot read (cut by `limit`, `\r\n`, 3 integer digits,
+  * the integer form, malformed), which the loop below reads as before —
+  * one refill, one ownership rule, one set of errors. The row path and
+  * a COUNT(*)-only fold never take the walk. */
 class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
     conf: Configuration, fold: BrcFoldReader = null)
   extends PartitionReader[InternalRow] {
@@ -435,6 +446,8 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
   // the measure (so measure malformation surfaces only when `t` is read)
   private val stationOrd = fields.indexOf("station")
   private val tOrd = fields.indexOf("t")
+  // a fold that reads `t` walks its lines a word at a time
+  private val words = fold != null && tOrd >= 0 && BrcFoldReader.wordWalk
 
   private val segments = p.segments.iterator
   private var seg: BrcSegment = null
@@ -536,7 +549,10 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
         }
         if (fold == null) return true
       }
-      // a folded or empty line, or the end of the file: loop on
+      // a folded or empty line, or the end of the file: the word walk
+      // folds the owned lines after it, then loop on
+      if (words) pos = fold.addLines(buf, pos, limit,
+        math.min(seg.end - filePos, limit.toLong).toInt)
     }
     false
   }
@@ -546,13 +562,17 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
 }
 
 /** The pushed partial aggregate of one range (R4/R5's per-chunk station
-  * table, PAPER.md §0). [[BrcPartitionReader]]'s line walk hands every
-  * line of every segment to [[add]], which folds it into an
-  * open-addressing table keyed on the station bytes (413 keys in the 1BRC
-  * data, at most 10,000 by its spec). Once the walk is drained, the
-  * reader emits one row per station: `station`, then one LONG per pushed
-  * aggregate, in pushed order. The sum uses `Math.addExact`, so overflow
-  * throws as Spark's ANSI `Sum` does. */
+  * table, PAPER.md §0). [[BrcPartitionReader]] hands every line of every
+  * segment to [[addLines]], the word walk, or to [[add]], which fold it
+  * into an open-addressing table keyed on the station bytes (413 keys in
+  * the 1BRC data, at most 10,000 by its spec). The table's hash mixes the
+  * station's 8-byte words and then its tail bytes (a 64-bit multiply per
+  * word, [[BrcFoldReader.hash]]); the walk mixes the same words as it
+  * passes them, so a station lands in one slot whichever of the two read
+  * its line. Once the walk is drained, the reader emits one row per
+  * station: `station`, then one LONG per pushed aggregate, in pushed
+  * order. The sum uses `Math.addExact`, so overflow throws as Spark's
+  * ANSI `Sum` does. */
 class BrcFoldReader(p: BrcInputPartition, kinds: Array[Int], conf: Configuration)
   extends PartitionReader[InternalRow] {
   import BrcDataSource._
@@ -572,11 +592,52 @@ class BrcFoldReader(p: BrcInputPartition, kinds: Array[Int], conf: Configuration
 
   private def home(h: Int): Int = (h ^ (h >>> 16)) & (keys.length - 1)
 
+  /** Fold every line from `from` on that the word walk can read, while
+    * the line starts at or before `last` (the range owns it). Per line:
+    * the words from its start are matched for ';' and '\n' and mixed into
+    * the station hash, the last one masked below the ';'; then the word
+    * after the ';' goes to [[BrcParse.wordTenths]], and the next line
+    * starts after its '\n'. @return the start of the first line not
+    * folded: past `last`, or one for the line loop — a '\n' before the
+    * ';', a word past `limit`, or a measure outside the fast shapes. */
+  private[sources] def addLines(buf: Array[Byte], from: Int, limit: Int,
+      last: Int): Int = {
+    import BrcFoldReader._
+    var p = from
+    while (p <= last) {
+      var i = p
+      var h = 0L
+      var w = 0L
+      var semi = 0L
+      while (semi == 0) {
+        if (i + 8 > limit) return p
+        w = Platform.getLong(buf, BYTE_ARRAY_OFFSET + i)
+        semi = bytesEqual(w, Semis)
+        if (semi == 0) {
+          if (bytesEqual(w, Newlines) != 0) return p
+          h = mix(h, w)
+          i += 8
+        }
+      }
+      val at = java.lang.Long.numberOfTrailingZeros(semi) // 8 × index + 7
+      if (java.lang.Long.numberOfTrailingZeros(bytesEqual(w, Newlines)) < at) return p
+      val sep = i + (at >>> 3)
+      if (sep + 9 > limit) return p
+      val m = Platform.getLong(buf, BYTE_ARRAY_OFFSET + sep + 1)
+      val t = BrcParse.wordTenths(m)
+      if (t == Long.MinValue) return p
+      val tail = w & ((1L << (at - 7)) - 1) // the bytes below the ';'
+      add(buf, p, sep, finish(mix(h, tail)), t)
+      p = sep + 2 + (java.lang.Long.numberOfTrailingZeros(bytesEqual(m, Newlines)) >>> 3)
+    }
+    p
+  }
+
   /** Fold the line whose station is `buf[from, sep)` and measure `t`. */
-  private[sources] def add(buf: Array[Byte], from: Int, sep: Int, t: Long): Unit = {
-    var h = 0
-    var i = from
-    while (i < sep) { h = 31 * h + buf(i); i += 1 }
+  private[sources] def add(buf: Array[Byte], from: Int, sep: Int, t: Long): Unit =
+    add(buf, from, sep, BrcFoldReader.hash(buf, from, sep), t)
+
+  private def add(buf: Array[Byte], from: Int, sep: Int, h: Int, t: Long): Unit = {
     var s = home(h)
     while (true) {
       val k = keys(s)
@@ -634,4 +695,41 @@ class BrcFoldReader(p: BrcInputPartition, kinds: Array[Int], conf: Configuration
   }
 
   override def close(): Unit = walk.close()
+}
+
+object BrcFoldReader {
+  /** The word walk reads words in the byte order it masks them in. */
+  private[sources] val wordWalk: Boolean =
+    java.nio.ByteOrder.nativeOrder == java.nio.ByteOrder.LITTLE_ENDIAN
+
+  private val Semis = 0x3B3B3B3B3B3B3B3BL
+  private val Newlines = 0x0A0A0A0A0A0A0A0AL
+
+  /** The high bit of each byte of `w` equal to the byte of `bytes`: the
+    * lowest set bit is exact; bits above a match may be false. */
+  private def bytesEqual(w: Long, bytes: Long): Long = {
+    val x = w ^ bytes
+    (x - 0x0101010101010101L) & ~x & 0x8080808080808080L
+  }
+
+  private def mix(h: Long, w: Long): Long = (h ^ w) * 0x9E3779B97F4A7C15L
+
+  private def finish(h: Long): Int = (h ^ (h >>> 32)).toInt
+
+  /** The station hash of `buf[from, until)`: its full 8-byte words, then
+    * the tail bytes assembled little-endian (0 for none), each mixed in —
+    * the words the walk mixes, so one station hashes the same on either
+    * path. */
+  private[sources] def hash(buf: Array[Byte], from: Int, until: Int): Int = {
+    var h = 0L
+    var i = from
+    while (i + 8 <= until) {
+      h = mix(h, Platform.getLong(buf, BYTE_ARRAY_OFFSET + i))
+      i += 8
+    }
+    var tail = 0L
+    var j = until
+    while (j > i) { j -= 1; tail = tail << 8 | (buf(j) & 0xFF) }
+    finish(mix(h, tail))
+  }
 }

@@ -143,15 +143,20 @@ class DocConsistencySpec extends SparkSpec {
     // the copies this guards against: a second parse loop beside
     // BrcParse.parseTenths, and the slower text readers the brc
     // connector replaced
-    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
       .toArray.map(_.asInstanceOf[java.nio.file.Path])
       .filter(_.toString.endsWith(".scala")).toSeq
-      .map(f => java.nio.file.Files.readString(f))
+      .map(f => f.getFileName.toString -> java.nio.file.Files.readString(f))
+    val sources = files.map(_._2)
     assert(sources.nonEmpty, "src/main must be readable from the repo root")
     def count(needle: String): Int = sources
       .map(_.split(java.util.regex.Pattern.quote(needle), -1).length - 1).sum
     assert(count("if (seenDot && frac == 0)") == 1,
       "parse 1BRC measures through BrcParse.parseTenths")
+    // the word-shape parse: its '\n', '.', digit mask
+    assert(count("0xFFF0FFF0F0L") == 1 &&
+      files.filter(_._2.contains("0xFFF0FFF0F0L")).map(_._1) == Seq("BrcParse.scala"),
+      "parse the fast 1BRC measure shapes through BrcParse.wordTenths")
     assert(count("System.arraycopy(buf, pos, buf, 0, limit - pos)") == 1,
       "walk 1BRC splits through BrcPartitionReader's one refill loop")
     val gone = Seq("readMeasurementsFast", "readMeasurementsTurbo",

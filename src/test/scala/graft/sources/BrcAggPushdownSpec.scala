@@ -93,12 +93,17 @@ class BrcAggPushdownSpec extends SparkSpec {
   }
 
   test("stations whose byte hashes collide stay apart") {
-    // "Aa" and "BB" share the 31-polynomial hash the fold table keys on
-    assert("Aa".hashCode == "BB".hashCode)
-    val path = file("Aa;1.0\nBB;2.0\nAa;-1.0\nBB;5.5\nAa;0.5\n")
+    // search for two stations with one 32-bit fold hash: one home slot and
+    // one stored hash, so only the byte compare keeps them apart
+    def hash(s: String) = { val b = s.getBytes("UTF-8"); BrcFoldReader.hash(b, 0, b.length) }
+    val seen = scala.collection.mutable.HashMap.empty[Int, String]
+    val (a, b) = Iterator.from(0).map(i => s"S$i").map(s => (seen.put(hash(s), s), s))
+      .collectFirst { case (Some(prev), s) => (prev, s) }.get
+    assert(a != b && hash(a) == hash(b))
+    val path = file(s"$a;1.0\n$b;2.0\n$a;-1.0\n$b;5.5\n$a;0.5\n")
     same(path, Seq(5L, 1L << 20))
-    assert(pushed(path, 1L << 20) == Seq(("Aa", -10L, 10L, 5L, 3L),
-      ("BB", 20L, 55L, 75L, 2L)))
+    assert(pushed(path, 1L << 20) == Seq((a, -10L, 10L, 5L, 3L),
+      (b, 20L, 55L, 75L, 2L)).sorted)
   }
 
   test("5,000 distinct stations grow the fold table") {
