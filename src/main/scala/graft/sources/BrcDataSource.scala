@@ -431,12 +431,15 @@ case class BrcInputPartition(segments: Seq[BrcSegment]) extends InputPartition
   * and the other tasks' compiled drain loops kept calling it in the
   * interpreter (1e7 rows after a CSV pass: 2.8–7.5 s instead of 1.6 s).
   * A fold that reads `t` on a little-endian host hands the buffer to
-  * [[BrcFoldReader.addLines]] after each line the loop reads: that word
-  * walk, its own loop, folds the owned lines after it and stops at the
-  * first one it cannot read (cut by `limit`, `\r\n`, 3 integer digits,
-  * the integer form, malformed), which the loop below reads as before —
-  * one refill, one ownership rule, one set of errors. The row path and
-  * a COUNT(*)-only fold never take the walk. */
+  * [[BrcFoldReader.addLines]] after each line the loop reads whose measure
+  * [[BrcParse.wordTenths]] reads: that word walk, its own loop, folds the
+  * owned lines after it and stops at the first one it cannot read (cut by
+  * `limit`, `\r\n`, 3 integer digits, the integer form, malformed), which
+  * the loop below reads as before — one refill, one ownership rule, one
+  * set of errors. The loop reads on by itself after a line of any other
+  * shape, so `\r\n` or integer-form input is read by the loop alone, not
+  * by a walk that fails on every line. The row path and a COUNT(*)-only
+  * fold never take the walk. */
 class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
     conf: Configuration, fold: BrcFoldReader = null)
   extends PartitionReader[InternalRow] {
@@ -540,8 +543,16 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
           if (stationOrd >= 0 && sep >= lineEnd)
             throw new IllegalArgumentException("missing ';' in 1BRC line: " +
               new String(buf, lineStart, lineEnd - lineStart, "UTF-8"))
-          if (fold != null) fold.add(buf, lineStart, sep, t)
-          else {
+          if (fold != null) {
+            fold.add(buf, lineStart, sep, t)
+            // after a line of a shape it reads, the word walk folds the
+            // owned lines that follow; after any other line the loop
+            // reads on, so input of other shapes pays no walk per line
+            if (words && sep + 9 <= limit && BrcParse.wordTenths(
+                Platform.getLong(buf, BYTE_ARRAY_OFFSET + sep + 1)) != Long.MinValue)
+              pos = fold.addLines(buf, pos, limit,
+                math.min(seg.end - filePos, limit.toLong).toInt)
+          } else {
             if (tOrd >= 0) row.setLong(tOrd, t)
             if (stationOrd >= 0) row.update(stationOrd, UTF8String.fromBytes(
               java.util.Arrays.copyOfRange(buf, lineStart, sep)))
@@ -549,10 +560,6 @@ class BrcPartitionReader(p: BrcInputPartition, fields: Seq[String],
         }
         if (fold == null) return true
       }
-      // a folded or empty line, or the end of the file: the word walk
-      // folds the owned lines after it, then loop on
-      if (words) pos = fold.addLines(buf, pos, limit,
-        math.min(seg.end - filePos, limit.toLong).toInt)
     }
     false
   }

@@ -153,6 +153,21 @@ class BrcShapeOffsetSpec extends SparkSpec {
     }
   }
 
+  test("mixed shapes and line ends in one file: the walk and the loop take turns") {
+    // runs of the walk's shapes between lines only the loop reads, so the
+    // walk stops and starts again all through the file
+    val rnd = new scala.util.Random(11)
+    val f = tempFile("brcmixed", ".txt")
+    val rows = Vector.tabulate(5000) { i =>
+      (station(rnd.nextInt(18), i), measures(rnd.nextInt(measures.length)),
+        eols(if (rnd.nextInt(4) == 0) 1 else 0))
+    }
+    Files.write(f, rows.map { case (st, m, eol) => s"$st;$m$eol" }.mkString.getBytes(UTF_8))
+    val want = stats(rows.map { case (st, m, _) => (st, csvTenths(m)) })
+    assert(foldOf(range(f, 0)) == want, "pushed")
+    assert(rowsOf(range(f, 0)) == want, "row path")
+  }
+
   test("malformed lines mid-file and as a file's last bytes throw the line loop's errors") {
     val f = tempFile("brcbad", ".txt")
     for ((line, semiless) <- badLines;

@@ -24,7 +24,9 @@ import sys
 def run(checkout, a):
     cmd = [sys.executable, "perfbench/run.py", "--workload", a.workload,
            "--seed", str(a.seed), "--seconds", str(a.seconds), "--trace", str(a.trace)]
-    p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, timeout=a.timeout)
+    # the build, data generation and JVM start, then the timed seconds
+    timeout = 1200 + 3 * a.seconds
+    p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, timeout=timeout)
     lines = p.stdout.strip().splitlines()
     try:
         out = json.loads(lines[-1])
@@ -59,7 +61,6 @@ def main():
     p.add_argument("--seed", type=int, default=7)
     p.add_argument("--seconds", type=int, default=10)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--timeout", type=int, default=1200, help="seconds per run")
     p.add_argument("--json", help="write the raw runs here")
     a = p.parse_args()
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
